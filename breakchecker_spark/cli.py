@@ -110,6 +110,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if bool(args.pages) == bool(args.live):
         parser.error("exactly one of --pages (replay) or --live is required")
+    if args.resume and not args.checkpoint:
+        parser.error("--resume needs --checkpoint (the dir to resume from)")
     if args.live and args.pre_extract:
         parser.error("--pre-extract is a replay-mode plan (pages at depth "
                      "d+1 don't exist until round d fetched them)")

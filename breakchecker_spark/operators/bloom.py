@@ -25,7 +25,7 @@ resumable equivalent.
 from __future__ import annotations
 
 import math
-from typing import Iterable, List, Tuple
+from typing import Iterable, Tuple
 
 import numpy as np
 
@@ -96,21 +96,3 @@ class BloomPart:
     @classmethod
     def from_bytes(cls, nbits: int, k: int, raw: bytes) -> "BloomPart":
         return cls(nbits, k, np.frombuffer(raw, dtype=np.uint64).copy())
-
-
-def build_rows(
-    keys: np.ndarray, n_parts: int, expected_per_part: int, fp_rate: float = 0.01
-) -> List[tuple]:
-    """Partition keys by hash and build one (part_id, nbits, k, bits) row each.
-
-    Used by tests and the local builder; the distributed builder does the
-    same per-group inside applyInPandas (see seen.py).
-    """
-    nbits, k = optimal_params(expected_per_part, fp_rate)
-    part_ids = (keys.astype(np.uint64) % np.uint64(n_parts)).astype(np.int64)
-    rows = []
-    for pid in range(n_parts):
-        part = BloomPart(nbits, k)
-        part.add(keys[part_ids == pid])
-        rows.append((pid, nbits, k, part.to_bytes()))
-    return rows

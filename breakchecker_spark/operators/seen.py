@@ -177,7 +177,6 @@ def filter_new(
     n_parts: int = 32,
     seen_buckets: int | None = None,
     cache_registry: list | None = None,
-    strategy: str = "broadcast",
     prune_buckets: bool = False,
     max_broadcast_rows: int | None = 4_000_000,
     candidate_bound: int | None = None,
@@ -220,8 +219,8 @@ def filter_new(
     links, and an unguarded broadcast at 10^10-key scale risks driver
     OOM. When the probe is cached (cache_registry passed), survivors
     are counted (one cheap job over the cache) and the plan falls back
-    to the shuffling ``anti`` strategy above the threshold. None
-    disables the guard.
+    to a shuffling anti-join against the seen side above the threshold.
+    None disables the guard.
 
     ``candidate_bound``: driver-known upper bound on candidate rows
     (e.g. the frontier row count from checkpoint footers). When it is
@@ -243,8 +242,7 @@ def filter_new(
     if bloom_table is None:
         return candidates.join(seen.select("key_hash"), "key_hash", "left_anti")
     if (
-        strategy == "broadcast"
-        and not prune_buckets
+        not prune_buckets
         and candidate_bound is not None
         and probe_min_candidates
         and candidate_bound <= probe_min_candidates
@@ -302,10 +300,8 @@ def filter_new(
     # cache registry the probe is cached internally so the count job
     # doesn't recompute it (evicted by the session, never unpersisted
     # by us — the crawl loop always passes a registry).
-    need_guard = (
-        strategy == "broadcast"
-        and max_broadcast_rows is not None
-        and not (candidate_bound is not None and candidate_bound <= max_broadcast_rows)
+    need_guard = max_broadcast_rows is not None and not (
+        candidate_bound is not None and candidate_bound <= max_broadcast_rows
     )
     if cache_registry is not None:
         probed = probed.cache()
@@ -325,13 +321,11 @@ def filter_new(
             # bloom probe when materialized.
             probed.unpersist()
         if big:
-            strategy = "anti"
-
-    if strategy == "anti":
-        new_survivors = survivors.join(
-            seen.select("key_hash"), "key_hash", "left_anti"
-        )
-        return definitely_new.unionByName(new_survivors)
+            # too many survivors to broadcast safely: plain anti-join
+            new_survivors = survivors.join(
+                seen.select("key_hash"), "key_hash", "left_anti"
+            )
+            return definitely_new.unionByName(new_survivors)
 
     if seen_buckets is not None and "bucket" in seen.columns:
         surv_keys = survivors.select("key_hash").withColumn(

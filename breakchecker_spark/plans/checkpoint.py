@@ -18,7 +18,9 @@ the store reproduces the three Iceberg properties the north rule needs
   a killed round are ignored on resume.
 
 The interface is format-agnostic: swap the parquet I/O for Iceberg
-calls and nothing above this module changes.
+calls and nothing above this module changes. Runs without a checkpoint
+dir use :class:`MemoryStore`, the same staging interface over
+in-memory checkpoints.
 """
 
 from __future__ import annotations
@@ -27,20 +29,12 @@ import glob
 import json
 import os
 import shutil
+from functools import reduce
 from typing import Dict, List, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def parquet_rows(path: str) -> int:
-    """Row count from parquet footers — no Spark job. Recursive so
-    directory-partitioned tables (bucket=N subdirs) count correctly."""
-    total = 0
-    for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        total += pq.ParquetFile(f).metadata.num_rows
-    return total
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def partition_stats(path: str) -> Dict[str, tuple]:
@@ -109,11 +103,6 @@ class CheckpointStore:
         with open(self._manifest_path) as fh:
             return json.load(fh)
 
-    def last_round(self) -> int:
-        """Round number of the last commit (-1 when fresh)."""
-        m = self.manifest()
-        return -1 if m is None else m["round"]
-
     def _committed_versions(self, table: str) -> List[int]:
         m = self.manifest()
         if m is None or table not in m["tables"]:
@@ -160,6 +149,18 @@ class CheckpointStore:
         writer.option(
             "compression", os.environ.get("SPARK_GRAFT_CKPT_CODEC", "snappy")
         ).parquet(path)
+
+    def _write_rows(self, table: str, rows: List[dict], schema, version) -> None:
+        """Write a tiny driver-side version with pyarrow — no Spark job."""
+        path = self._dir(table, version)
+        if os.path.exists(path):
+            shutil.rmtree(path)  # orphan from a killed run
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=schema),
+            os.path.join(path, "part-00000.parquet"),
+            compression="zstd",
+        )
 
     def _record_lineage(self, table: str, version) -> int:
         """Footer-walk a freshly staged version once: remember its
@@ -229,15 +230,7 @@ class CheckpointStore:
                 for (table, version), stats in sorted(self._pending_lineage.items())
                 for part, (files, nrows, nbytes) in sorted(stats.items())
             ]
-            path = self._dir("lineage", tag)
-            if os.path.exists(path):
-                shutil.rmtree(path)  # orphan from a killed run
-            os.makedirs(path, exist_ok=True)
-            pq.write_table(
-                pa.Table.from_pylist(rows, schema=LINEAGE_ARROW),
-                os.path.join(path, "part-00000.parquet"),
-                compression="zstd",
-            )
+            self._write_rows("lineage", rows, LINEAGE_ARROW, tag)
             tables["lineage"] = committed + [tag]
         manifest = {"round": round_no, "tables": tables}
         if extra:
@@ -262,18 +255,10 @@ class CheckpointStore:
         through a Spark write was a whole job of fixed scheduler cost
         per round (r2 verdict). Spark reads the pyarrow-written file
         back exactly like its own output."""
-        path = self._dir(table, round_no)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
-        tbl = pa.Table.from_pylist(rows, schema=schema)
-        pq.write_table(
-            tbl, os.path.join(path, "part-00000.parquet"), compression="zstd"
-        )
+        self._write_rows(table, rows, schema, round_no)
         base = self._pending.get(table, self._committed_versions(table))
         self._pending[table] = list(base) + [round_no]
-        self._record_lineage(table, round_no)
-        return tbl.num_rows
+        return self._record_lineage(table, round_no)
 
     def stage_rewrite(
         self,
@@ -345,7 +330,11 @@ class CheckpointStore:
         versions = self._committed_versions(table)
         if not versions:
             return None
-        return sum(parquet_rows(self._dir(table, v)) for v in versions)
+        return sum(
+            rows
+            for v in versions
+            for _files, rows, _bytes in partition_stats(self._dir(table, v)).values()
+        )
 
     def gc(self) -> int:
         """Delete version dirs no committed manifest references.
@@ -440,7 +429,92 @@ class CheckpointStore:
         if not versions:
             return None
         dfs = [spark.read.parquet(self._dir(table, v)) for v in versions]
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
-        return out
+        return reduce(DataFrame.unionByName, dfs)
+
+
+class MemoryStore:
+    """The :class:`CheckpointStore` calls a fresh crawl makes, over
+    in-memory checkpoints — the store of runs without a checkpoint dir.
+
+    A staged version is an eager ``localCheckpoint`` (which truncates
+    plan lineage); its row count comes from an Observation riding that
+    same job, so staging costs no extra Spark job. Append tables keep
+    one checkpoint per round and ``read`` unions them — a round stages
+    O(new rows), not O(total). No manifest: no resume, no lineage."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.spark = spark
+        # table → [(checkpointed DataFrame, rows)] per live version
+        self._tables: Dict[str, List[tuple]] = {}
+        self._pending: Dict[str, List[tuple]] = {}
+
+    def manifest(self) -> None:
+        return None  # nothing to resume from
+
+    @staticmethod
+    def _checkpoint(df: DataFrame) -> tuple:
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        return df, int(obs.get["n"])
+
+    def _append(self, table: str, version: tuple) -> int:
+        base = self._pending.get(table, self._tables.get(table, []))
+        self._pending[table] = base + [version]
+        return version[1]
+
+    def stage_replace(self, table: str, df: DataFrame, round_no: int) -> int:
+        self._pending[table] = [self._checkpoint(df)]
+        return self._pending[table][0][1]
+
+    def stage_append(
+        self,
+        table: str,
+        df: DataFrame,
+        round_no: int,
+        partition_by: str | None = None,
+    ) -> int:
+        return self._append(table, self._checkpoint(df))
+
+    def stage_append_rows(
+        self,
+        table: str,
+        rows: List[dict],
+        schema: "pa.Schema",
+        round_no: int,
+    ) -> int:
+        # driver-local rows: no lineage to truncate, no job to stage
+        df = self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+        return self._append(table, (df, len(rows)))
+
+    def compact(
+        self,
+        spark: SparkSession,
+        table: str,
+        round_no: int,
+        partition_by: str | None = None,
+        min_versions: int = 8,
+    ) -> bool:
+        versions = self._tables.get(table, [])
+        if table in self._pending or len(versions) < min_versions:
+            return False
+        # rebalance: fold the per-round partitions too, not just the plans
+        df = self.read(spark, table).hint("rebalance").localCheckpoint(eager=True)
+        self._pending[table] = [(df, self.table_rows(table))]
+        return True
+
+    def commit(self, round_no: int, extra: dict | None = None) -> None:
+        self._tables.update(self._pending)
+        self._pending = {}
+
+    def gc(self) -> int:
+        return 0  # superseded checkpoints are freed by Spark's ContextCleaner
+
+    def read(self, spark: SparkSession, table: str) -> Optional[DataFrame]:
+        versions = self._tables.get(table)
+        if not versions:
+            return None
+        return reduce(DataFrame.unionByName, [df for df, _rows in versions])
+
+    def table_rows(self, table: str) -> Optional[int]:
+        versions = self._tables.get(table)
+        return sum(rows for _df, rows in versions) if versions else None

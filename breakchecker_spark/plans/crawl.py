@@ -21,10 +21,11 @@ rounds. Each round:
    canonical link candidates at depth+1 (enqueue-time checks: depth
    gate, within-round struct-key dedup pinned to min (depth, url),
    anti-join vs seen and vs queued — bc:1397-1421);
-6. **commit** — frontier / url_seen / contacts / metrics checkpoint
-   atomically; a killed run resumes from the last commit. Reading state
-   back from the checkpoint also truncates plan lineage, keeping
-   per-round shuffle count flat as depth grows.
+6. **commit** — frontier / url_seen / contacts / metrics deltas stage
+   and commit atomically through one store interface: on disk with a
+   checkpoint dir (a killed run resumes from the last commit), else in
+   memory. Reading state back from the store also truncates plan
+   lineage, keeping per-round shuffle count flat as depth grows.
 
 Determinism pins (SURVEY.md §7): all seeds start at depth 0 together;
 within a round, candidate dedup order is (depth, url); the reference's
@@ -45,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions import contacts as contacts_fn
 from ..functions import udfs
 from ..operators import extract, politeness, seen
-from .checkpoint import CheckpointStore
+from .checkpoint import CheckpointStore, MemoryStore, partition_stats
 
 _DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
 
@@ -93,12 +94,8 @@ class CrawlConfig:
     # round; worth it when the seen scan dominates — huge seen table,
     # narrow rounds)
     prune_seen_buckets: bool = False
-    # exact-membership strategy: "broadcast" = shuffle-free two-step
-    # broadcast confirm (the 10^10-key path); "anti" = plain anti-join
-    # (AQE broadcasts the seen side while it is small)
-    seen_join: str = "broadcast"
-    # broadcast-safety guard: fall back to "anti" for a round whose
-    # bloom-surviving candidates exceed this (None disables)
+    # broadcast-safety guard: fall back to a plain anti-join for a round
+    # whose bloom-surviving candidates exceed this (None disables)
     seen_broadcast_max_rows: Optional[int] = 4_000_000
     # skip the bloom-probe cogroup stage when the round's driver-known
     # candidate bound is at or below this (seen.filter_new
@@ -143,7 +140,7 @@ class CrawlResult:
     rounds: int
     summary: dict = field(default_factory=dict)
     # per-partition commit lineage (round, table, version, partition,
-    # files, rows, bytes) — populated only for checkpointed runs
+    # files, rows, bytes) — None without a checkpoint dir
     lineage: Optional[DataFrame] = None
 
 
@@ -230,22 +227,19 @@ def run_crawl(
         )
     if fetcher is None and pages is None:
         raise ValueError("either a pages table or a fetcher is required")
-    store = CheckpointStore(config.checkpoint_dir) if config.checkpoint_dir else None
-
-    seen_schema = "key_hash long, url string, depth int"
-    if config.seen_buckets:
-        seen_schema += ", bucket int"
-    empty_seen = spark.createDataFrame([], seen_schema)
-    empty_contacts = spark.createDataFrame(
-        [], "kind string, identifier string, source_url string, depth int"
-    )
-    empty_metrics = spark.createDataFrame(
-        [], "run_id string, round int, metric string, value long"
+    if resume and not config.checkpoint_dir:
+        raise ValueError("resume requires a checkpoint_dir to resume from")
+    store = (
+        CheckpointStore(config.checkpoint_dir)
+        if config.checkpoint_dir
+        else MemoryStore(spark)
     )
 
     start_round = 0
+    frontier_rows = -1  # unknown → check lazily
     bloom_table = None
-    if resume and store is not None and store.manifest() is not None:
+    manifest = store.manifest()
+    if resume and manifest is not None:
         if config.verify_checkpoint:
             problems = store.verify_integrity()
             if problems:
@@ -254,10 +248,11 @@ def run_crawl(
                     f"disagree with committed lineage: {problems[:5]}"
                     + (f" (+{len(problems) - 5} more)" if len(problems) > 5 else "")
                 )
-        start_round = store.last_round() + 1
+        start_round = manifest["round"] + 1
+        frontier_rows = manifest.get("frontier_rows", -1)
         frontier = store.read(spark, "frontier")
         url_seen = store.read(spark, "url_seen")
-        ckpt_buckets = store.manifest().get("seen_buckets", 0)
+        ckpt_buckets = manifest.get("seen_buckets", 0)
         want_buckets = config.seen_buckets or 0
         if url_seen is not None and ckpt_buckets != want_buckets:
             # Checkpoint written under a different bucket modulus (or a
@@ -284,11 +279,7 @@ def run_crawl(
                     else None
                 ),
             )
-            import glob as _glob
-
-            if _glob.glob(
-                os.path.join(rb_path, "**", "*.parquet"), recursive=True
-            ):
+            if partition_stats(rb_path):  # a zero-row rewrite has no files
                 url_seen = spark.read.parquet(rb_path)
         all_contacts = store.read(spark, "contacts")
         metrics = store.read(spark, "metrics")
@@ -306,14 +297,21 @@ def run_crawl(
                 url_seen, config.bloom_parts, config.bloom_expected_per_part
             ).localCheckpoint(eager=True)
     else:
-        if store is not None and store.manifest() is not None:
+        if manifest is not None:
             # fresh run over a dirty checkpoint dir: drop the old state,
             # or the append-table manifest would leak prior-run versions
             store.reset()
         frontier = _dedup_frontier(seeds_to_frontier(seeds))
-        url_seen = empty_seen
-        all_contacts = empty_contacts
-        metrics = empty_metrics
+        seen_schema = "key_hash long, url string, depth int"
+        if config.seen_buckets:
+            seen_schema += ", bucket int"
+        url_seen = spark.createDataFrame([], seen_schema)
+        all_contacts = spark.createDataFrame(
+            [], "kind string, identifier string, source_url string, depth int"
+        )
+        metrics = spark.createDataFrame(
+            [], "run_id string, round int, metric string, value long"
+        )
 
     # url_seen physical layout: bucket DIRECTORIES exist to serve the
     # opt-in scan pruning (prune_seen_buckets); without it they cost
@@ -347,9 +345,6 @@ def run_crawl(
         pre.count()
         _tlog("pre-extract pass", t_pre)
     rounds_run = start_round
-    frontier_rows = -1  # unknown → check lazily
-    if resume and store is not None and store.manifest() is not None:
-        frontier_rows = store.manifest().get("frontier_rows", -1)
 
     for round_no in range(start_round, config.max_rounds):
         if frontier_rows == 0 or (frontier_rows < 0 and frontier.isEmpty()):
@@ -563,7 +558,6 @@ def run_crawl(
                 config.bloom_parts,
                 seen_buckets=config.seen_buckets or None,
                 cache_registry=round_caches,
-                strategy=config.seen_join,
                 prune_buckets=config.prune_seen_buckets,
                 max_broadcast_rows=config.seen_broadcast_max_rows,
                 candidate_bound=candidate_bound,
@@ -578,154 +572,116 @@ def run_crawl(
             )
 
         # 6. stage + atomic commit (also truncates lineage via read-back).
-        # Row counts come from the staged parquet footers — no count jobs.
+        # Row counts come back from staging (parquet footers on disk,
+        # in-band Observations in memory) — no count jobs.
         tt = _tlog(f"r{round_no} plan", t0)
 
-        def _metric_rows(n_eligible: int, n_contacts: int) -> list[tuple]:
-            """Driver-side metric tuples; call only after the contacts
-            plan has materialized (DropCounters.get blocks on it)."""
-            rows = [
-                (config.run_id, round_no, "frontier_urls", n_eligible),
-                (config.run_id, round_no, "contacts_extracted", n_contacts),
-                (config.run_id, round_no, "round_millis",
-                 int((time.time() - t0) * 1000)),
-            ]
-            rows += [
-                (config.run_id, round_no, metric, int(value))
-                for metric, value in drops.get()
-            ]
-            return rows
-
-        if store is not None:
-            if config.compact_every and (round_no + 1) % config.compact_every == 0:
-                # Iceberg-style maintenance: fold accumulated deltas
-                # into one version per append table before this round's
-                # delta stages on top (kill-safe — publishes with the
-                # round's atomic commit; old dirs gc'd after).
+        if config.compact_every and (round_no + 1) % config.compact_every == 0:
+            # Iceberg-style maintenance: fold accumulated deltas
+            # into one version per append table before this round's
+            # delta stages on top (kill-safe — publishes with the
+            # round's atomic commit; old dirs gc'd after).
+            for table in ("url_seen", "contacts", "metrics", "lineage"):
                 store.compact(
                     spark,
-                    "url_seen",
+                    table,
                     round_no,
-                    partition_by=_seen_layout,
+                    partition_by=_seen_layout if table == "url_seen" else None,
                     min_versions=config.compact_every,
                 )
-                store.compact(
-                    spark, "contacts", round_no, min_versions=config.compact_every
-                )
-                store.compact(
-                    spark, "metrics", round_no, min_versions=config.compact_every
-                )
-                store.compact(
-                    spark, "lineage", round_no, min_versions=config.compact_every
-                )
-                tt = _tlog(f"r{round_no} compact", t0)
-            # Stage contacts first: it materializes every shared cache
-            # (eligible, harvested pages, contact rows). The remaining
-            # tables then read caches only, so they stage concurrently
-            # (separate driver threads → overlapping Spark jobs).
-            n_contacts = store.stage_append("contacts", round_contacts, round_no)
-            tt = _tlog(f"r{round_no} stage contacts n={n_contacts}", tt)
+            tt = _tlog(f"r{round_no} compact", t0)
+        # Stage contacts first: it materializes every shared cache
+        # (eligible, harvested pages, contact rows). The remaining
+        # tables then read caches only, so they stage concurrently
+        # (separate driver threads → overlapping Spark jobs).
+        n_contacts = store.stage_append("contacts", round_contacts, round_no)
+        tt = _tlog(f"r{round_no} stage contacts n={n_contacts}", tt)
 
-            if pre is None:
-                # Classic mode: build the next frontier in the MAIN
-                # thread, after contacts staging has materialized the
-                # page/extraction caches — the broadcast-guard count
-                # inside filter_new then reads warm caches. Running it
-                # concurrently with the other staging threads instead
-                # oversubscribes the pandas-UDF workers (measured: 46 s
-                # vs ~3 s for the same round).
-                frontier_df = _build_frontier_next()
-                tt = _tlog(f"r{round_no} frontier plan+guard", tt)
-            else:
-                # Pre-extract mode: the rounds carry no extraction
-                # UDFs, so the frontier build (probe + anti-join +
-                # dedup) can run INSIDE the staging pool, overlapping
-                # the url_seen/bloom writes instead of serializing a
-                # 2-3 s job between them (r4 verdict item #2). The
-                # in-band link-count bound usually removes the guard's
-                # dedicated count job entirely.
-                cand_bound = int(drop_obs.get["nl"])
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                f_seen = pool.submit(
-                    store.stage_append,
-                    "url_seen",
-                    new_seen,
-                    round_no,
-                    _seen_layout,
-                )
-                if pre is None:
-                    f_frontier = pool.submit(
-                        store.stage_replace, "frontier", frontier_df, round_no
-                    )
-                else:
-                    f_frontier = pool.submit(
-                        lambda: store.stage_replace(
-                            "frontier", _build_frontier_next(cand_bound), round_no
-                        )
-                    )
-                f_bloom = (
-                    pool.submit(store.stage_replace, "bloom", bloom_next, round_no)
-                    if bloom_next is not None
-                    else None
-                )
-                n_eligible = f_seen.result()
-                frontier_rows = f_frontier.result()
-                if f_bloom is not None:
-                    f_bloom.result()
-            tt = _tlog(
-                f"r{round_no} stage seen={n_eligible} frontier={frontier_rows} bloom",
-                tt,
-            )
-            store.stage_append_rows(
-                "metrics",
-                [
-                    dict(zip(("run_id", "round", "metric", "value"), r))
-                    for r in _metric_rows(n_eligible, n_contacts)
-                ],
-                _METRICS_ARROW,
-                round_no,
-            )
-            tt = _tlog(f"r{round_no} stage metrics", tt)
-            store.commit(
-                round_no,
-                {
-                    "run_id": config.run_id,
-                    "frontier_rows": frontier_rows,
-                    # bucket modulus the url_seen layout was written
-                    # with — validated on resume (rebucket on mismatch)
-                    "seen_buckets": config.seen_buckets or 0,
-                },
-            )
-            store.gc()  # drop compacted-away / orphan version dirs
-            frontier = store.read(spark, "frontier")
-            url_seen = store.read(spark, "url_seen")
-            all_contacts = store.read(spark, "contacts")
-            metrics = store.read(spark, "metrics")
-            if bloom_next is not None:
-                bloom_table = store.read(spark, "bloom")
+        if pre is None:
+            # Classic mode: build the next frontier in the MAIN
+            # thread, after contacts staging has materialized the
+            # page/extraction caches — the broadcast-guard count
+            # inside filter_new then reads warm caches. Running it
+            # concurrently with the other staging threads instead
+            # oversubscribes the pandas-UDF workers (measured: 46 s
+            # vs ~3 s for the same round).
+            frontier_df = _build_frontier_next()
+            tt = _tlog(f"r{round_no} frontier plan+guard", tt)
         else:
-            # keep lineage bounded without a store
-            n_eligible = eligible.count()
-            n_contacts = round_contacts.count()
-            frontier = _build_frontier_next(
-                int(drop_obs.get["nl"]) if pre is not None else None
-            ).localCheckpoint(eager=True)
-            frontier_rows = -1
-            url_seen = url_seen_next.localCheckpoint(eager=True)
-            all_contacts = all_contacts.unionByName(round_contacts).localCheckpoint(
-                eager=True
+            # Pre-extract mode: the rounds carry no extraction
+            # UDFs, so the frontier build (probe + anti-join +
+            # dedup) can run INSIDE the staging pool, overlapping
+            # the url_seen/bloom writes instead of serializing a
+            # 2-3 s job between them (r4 verdict item #2). The
+            # in-band link-count bound usually removes the guard's
+            # dedicated count job entirely.
+            cand_bound = int(drop_obs.get["nl"])
+
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            f_seen = pool.submit(
+                store.stage_append,
+                "url_seen",
+                new_seen,
+                round_no,
+                _seen_layout,
             )
-            metrics = metrics.unionByName(
-                spark.createDataFrame(
-                    _metric_rows(n_eligible, n_contacts),
-                    schema=empty_metrics.schema,
+            f_frontier = pool.submit(
+                lambda: store.stage_replace(
+                    "frontier",
+                    frontier_df if pre is None else _build_frontier_next(cand_bound),
+                    round_no,
                 )
-            ).localCheckpoint(eager=True)
-            if bloom_next is not None:
-                bloom_table = bloom_next.localCheckpoint(eager=True)
+            )
+            f_bloom = (
+                pool.submit(store.stage_replace, "bloom", bloom_next, round_no)
+                if bloom_next is not None
+                else None
+            )
+            n_eligible = f_seen.result()
+            frontier_rows = f_frontier.result()
+            if f_bloom is not None:
+                f_bloom.result()
+        tt = _tlog(
+            f"r{round_no} stage seen={n_eligible} frontier={frontier_rows} bloom",
+            tt,
+        )
+        # driver-side metric rows; drops.get() blocks until the contacts
+        # plan has materialized, which its staging above guaranteed
+        round_metrics = [
+            ("frontier_urls", n_eligible),
+            ("contacts_extracted", n_contacts),
+            ("round_millis", int((time.time() - t0) * 1000)),
+            *drops.get(),
+        ]
+        store.stage_append_rows(
+            "metrics",
+            [
+                dict(run_id=config.run_id, round=round_no, metric=m, value=int(v))
+                for m, v in round_metrics
+            ],
+            _METRICS_ARROW,
+            round_no,
+        )
+        tt = _tlog(f"r{round_no} stage metrics", tt)
+        store.commit(
+            round_no,
+            {
+                "run_id": config.run_id,
+                "frontier_rows": frontier_rows,
+                # bucket modulus the url_seen layout was written
+                # with — validated on resume (rebucket on mismatch)
+                "seen_buckets": config.seen_buckets or 0,
+            },
+        )
+        store.gc()  # drop compacted-away / orphan version dirs
+        frontier = store.read(spark, "frontier")
+        url_seen = store.read(spark, "url_seen")
+        all_contacts = store.read(spark, "contacts")
+        metrics = store.read(spark, "metrics")
+        if bloom_next is not None:
+            bloom_table = store.read(spark, "bloom")
         eligible.unpersist()
         for df in caches:
             df.unpersist()
@@ -733,18 +689,14 @@ def run_crawl(
             df.unpersist()
 
     if pre is not None:
-        # every round's state was materialized (store read-back or
-        # eager localCheckpoint), so nothing returned still depends on
-        # the persisted pre-extraction table
+        # every round's state was read back from the store, so nothing
+        # returned still depends on the persisted pre-extraction table
         pre.unpersist()
     t_tail = time.time()
     deduped = extract.dedup_contacts(all_contacts)
-    if store is not None and store.manifest() is not None:
-        # endpoint count from the committed parquet footers — no Spark
-        # job (url_seen rows are exactly the visited endpoints)
-        n_endpoints = store.table_rows("url_seen") or 0
-    else:
-        n_endpoints = url_seen.count()
+    # endpoint count from the store's committed row counts — no Spark
+    # job (url_seen rows are exactly the visited endpoints)
+    n_endpoints = store.table_rows("url_seen") or 0
     t_tail = _tlog("tail endpoints", t_tail)
     summary = {
         "num_endpoints": n_endpoints,
@@ -764,9 +716,5 @@ def run_crawl(
         "rounds": rounds_run,
     }
     t_tail = _tlog("tail subdomains", t_tail)
-    lineage = (
-        store.read(spark, "lineage")
-        if store is not None and store.manifest() is not None
-        else None
-    )
+    lineage = store.read(spark, "lineage")
     return CrawlResult(url_seen, deduped, metrics, rounds_run, summary, lineage)

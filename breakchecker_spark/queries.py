@@ -599,7 +599,6 @@ def seen_filter_new(spark, sf_dir):
         bloom_table,
         n_parts=8,
         seen_buckets=8,
-        strategy="broadcast",
     )
     return out.select("user_id").orderBy("user_id")
 

@@ -1,15 +1,17 @@
-"""Checkpoint compaction (Iceberg rewrite_data_files analogue) + gc."""
+"""Checkpoint compaction (Iceberg rewrite_data_files analogue) + gc, and
+the in-memory store's equivalence with the on-disk one."""
 
 from __future__ import annotations
 
 import glob
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from breakchecker_spark import schemas
-from breakchecker_spark.plans.checkpoint import CheckpointStore
+from breakchecker_spark.plans.checkpoint import CheckpointStore, MemoryStore
 from breakchecker_spark.plans.crawl import CrawlConfig, run_crawl
 from tests import fixture_web
 
@@ -106,6 +108,44 @@ def test_compact_skips_table_with_pending_rewrite(spark, tmp_path):
     )
 
 
+def test_memory_store_matches_checkpoint_store(spark, tmp_path):
+    """Both stores through one stage → commit → read → compact sequence
+    (replace, append, driver-side rows, zero-row stages): same returned
+    counts, same committed row counts, same rows read back."""
+    schema = pa.schema([("x", pa.int64())])
+
+    def ids(lo, hi):
+        return spark.range(lo, hi).withColumnRenamed("id", "x")
+
+    def drive(store):
+        returned = []
+        for r in range(3):
+            returned.append(store.stage_append("t", ids(r * 10, r * 10 + r), r))
+            returned.append(store.stage_replace("f", ids(0, r), r))
+            returned.append(store.stage_append_rows("m", [{"x": r}] * r, schema, r))
+            store.commit(r)
+        returned.append(store.compact(spark, "t", 3, min_versions=3))
+        returned.append(store.compact(spark, "m", 3, min_versions=4))  # no-op
+        # compaction alone is invisible until commit
+        returned.append(store.read(spark, "t").count())
+        returned.append(store.stage_append("t", ids(100, 102), 3))
+        store.commit(3)
+        store.gc()
+        rows = {t: sorted(r["x"] for r in store.read(spark, t).collect())
+                for t in ("t", "f", "m")}
+        counts = {t: store.table_rows(t) for t in ("t", "f", "m", "absent")}
+        return returned, counts, rows, store.read(spark, "absent")
+
+    disk = drive(CheckpointStore(str(tmp_path / "disk")))
+    memory_store = MemoryStore(spark)
+    memory = drive(memory_store)
+    assert memory == disk
+    assert disk[1] == {"t": 5, "f": 2, "m": 3, "absent": None}
+    # the compaction folded t's three round versions into one
+    assert len(memory_store._tables["t"]) == 2
+    assert _versions_on_disk(str(tmp_path / "disk"), "t") == ["v3", "v3c"]
+
+
 def test_crawl_with_frequent_compaction_matches_uninterrupted(spark, tmp_path):
     pages_df = spark.createDataFrame(fixture_web.pages_rows(), schema=schemas.PAGES)
     seeds_df = spark.createDataFrame(fixture_web.SEEDS, schema=schemas.SEEDS)
@@ -135,3 +175,17 @@ def test_crawl_with_frequent_compaction_matches_uninterrupted(spark, tmp_path):
         .collect()[0][0]
     )
     assert total == compacted.summary["num_endpoints"]
+    # the in-memory store compacts on the same schedule, to the same state
+    in_memory = run_crawl(
+        spark, seeds_df, pages_df, CrawlConfig(**base, compact_every=2)
+    )
+    assert in_memory.rounds == plain.rounds
+    assert {(r["url"], r["depth"]) for r in in_memory.url_seen.collect()} == v_seen
+    assert in_memory.summary == compacted.summary
+    assert sorted(
+        in_memory.metrics.filter(F.col("metric") != "round_millis")
+        .select("round", "metric", "value").collect()
+    ) == sorted(
+        compacted.metrics.filter(F.col("metric") != "round_millis")
+        .select("round", "metric", "value").collect()
+    )

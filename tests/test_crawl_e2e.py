@@ -75,20 +75,23 @@ def test_full_crawl_matches_oracle(spark, pages_df, seeds_df, use_bloom, pre_ext
 
 
 def test_pre_extract_equals_classic_with_budget_and_robots(
-    spark, pages_df, seeds_df
+    spark, pages_df, seeds_df, tmp_path
 ):
     """Pre-extract mode must be output-identical to the classic loop
     under the adversarial configs too: politeness carry-over rounds
     (deferred rows re-join later frontiers) and robots gating. Metrics
     (incl. the per-round drop counters, which pre-extract aggregates
-    via a different mechanism) must also match round for round."""
+    via a different mechanism) must also match round for round. The
+    classic side runs on the in-memory store and the pre-extract side
+    on the checkpoint store, so the two stores are pinned equal too."""
     robots_rows = [("example.com", "/deep", 1.0)]
     robots_df = spark.createDataFrame(robots_rows, schema=schemas.ROBOTS)
     base = dict(scope_host=fixture_web.SCOPE, max_depth=3, host_budget=1,
                 use_bloom=True, bloom_parts=4, bloom_expected_per_part=1000)
     a = run_crawl(spark, seeds_df, pages_df, CrawlConfig(**base), robots=robots_df)
     b = run_crawl(
-        spark, seeds_df, pages_df, CrawlConfig(**base, pre_extract=True),
+        spark, seeds_df, pages_df,
+        CrawlConfig(**base, pre_extract=True, checkpoint_dir=str(tmp_path)),
         robots=robots_df,
     )
     assert _engine_visited(a) == _engine_visited(b)
@@ -203,6 +206,14 @@ def test_resume_equals_uninterrupted(spark, pages_df, seeds_df, tmp_path):
 
     assert _engine_visited(resumed) == _engine_visited(full)
     assert _engine_contacts(resumed) == _engine_contacts(full)
+
+
+def test_resume_without_checkpoint_dir_raises(spark, pages_df, seeds_df):
+    """Without a checkpoint dir there is no state to resume from; a
+    silent fresh re-crawl would hide the caller's mistake."""
+    cfg = CrawlConfig(scope_host=fixture_web.SCOPE, max_depth=1)
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        run_crawl(spark, seeds_df, pages_df, cfg, resume=True)
 
 
 def test_pre_extract_resume_equals_uninterrupted(

@@ -190,3 +190,11 @@ def test_cli_rejects_bad_domain(pages_path):
 
     with pytest.raises(ValueError):
         cli.main(["--domain", "not_a_domain", "--pages", pages_path])
+
+
+def test_cli_rejects_resume_without_checkpoint(capsys):
+    from breakchecker_spark import cli
+
+    with pytest.raises(SystemExit):
+        cli.main(["--domain", "example.com", "--pages", "/tmp/x", "--resume"])
+    assert "--checkpoint" in capsys.readouterr().err
