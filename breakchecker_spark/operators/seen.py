@@ -9,13 +9,10 @@ the structural key that collapses near-duplicate URLs
 
 Scale design (10^10 seen URLs):
 
-* the exact ``url_seen`` table is written directory-partitioned by
-  ``bucket = pmod(key_hash, N)`` (checkpoint store), and the exact
-  membership check never shuffles it: bloom survivors are broadcast
-  into a map-side semi join against the scan, and the confirmed-seen
-  set — smaller still — is broadcast back into the final anti-join;
-  ``prune_buckets`` pushes an explicit ``bucket IN`` partition filter
-  into the scan (measured: Spark's DPP does not fire for this shape);
+* the exact membership check never shuffles the ``url_seen`` table:
+  bloom survivors are broadcast into a map-side semi join against its
+  scan, and the confirmed-seen set — smaller still — is broadcast back
+  into the final anti-join;
 * the bloom filter is itself a table of (part_id, bitset) rows,
   co-grouped with candidates via ``cogroup().applyInPandas`` — no
   driver state, no whole-filter broadcast;
@@ -175,9 +172,7 @@ def filter_new(
     seen: DataFrame,
     bloom_table: DataFrame | None = None,
     n_parts: int = 32,
-    seen_buckets: int | None = None,
     cache_registry: list | None = None,
-    prune_buckets: bool = False,
     max_broadcast_rows: int | None = 4_000_000,
     candidate_bound: int | None = None,
     probe_min_candidates: int = 50_000,
@@ -192,22 +187,10 @@ def filter_new(
     shuffled**. Bloom survivors (true dups + ~1% FP — bounded small)
     are broadcast; ``seen ⋉ broadcast(survivors)`` confirms which are
     truly seen with a map-side scan, then the (even smaller) confirmed
-    set is broadcast back into an anti-join. When ``seen_buckets`` is
-    set and the seen table carries the matching ``bucket`` column
-    (written directory-partitioned by the checkpoint store), the semi
-    join includes the bucket key.
-
-    ``prune_buckets=True`` additionally collects the survivors'
-    distinct bucket list (bounded by ``seen_buckets``; reads the
-    cached probe when a ``cache_registry`` is passed) and pushes a
-    static ``bucket IN (...)`` partition filter into the seen scan —
-    measured: Spark 4.1 does NOT emit a dynamic-partition-pruning
-    filter for this broadcast-semi shape, so directory skipping needs
-    the explicit filter. Costs one small driver action per call; the
-    shuffle-free property holds either way, so this matters only when
-    the scan itself (not the shuffle) dominates — e.g. 10^10 keys in
-    many buckets with a candidate round touching few of them. (On
-    Iceberg the same effect comes from storage-partitioned joins.)
+    set is broadcast back into an anti-join (``_confirm_new``). The
+    semi join keys on ``key_hash`` alone: a round's survivors spread
+    over the whole key space, so no storage layout of the seen table
+    lets the scan skip a useful share of it.
 
     ``cache_registry``: the probed candidate frame feeds three branches
     (definitely-new, broadcast build, final anti-join); when a list is
@@ -242,8 +225,7 @@ def filter_new(
     if bloom_table is None:
         return candidates.join(seen.select("key_hash"), "key_hash", "left_anti")
     if (
-        not prune_buckets
-        and candidate_bound is not None
+        candidate_bound is not None
         and probe_min_candidates
         and candidate_bound <= probe_min_candidates
         and (max_broadcast_rows is None or candidate_bound <= max_broadcast_rows)
@@ -255,20 +237,7 @@ def filter_new(
             # like the probed path caches ``probed``
             survivors = survivors.cache()
             cache_registry.append(survivors)
-        if seen_buckets is not None and "bucket" in seen.columns:
-            surv_keys = survivors.select("key_hash").withColumn(
-                "bucket", F.pmod(F.col("key_hash"), F.lit(seen_buckets)).cast("int")
-            )
-            confirmed = seen.select("bucket", "key_hash").join(
-                F.broadcast(surv_keys), ["bucket", "key_hash"], "left_semi"
-            )
-        else:
-            confirmed = seen.select("key_hash").join(
-                F.broadcast(survivors.select("key_hash")), "key_hash", "left_semi"
-            )
-        return survivors.join(
-            F.broadcast(confirmed.select("key_hash")), "key_hash", "left_anti"
-        )
+        return _confirm_new(survivors, seen)
 
     cand_cols = candidates.columns
     cand = candidates.withColumn(
@@ -327,22 +296,13 @@ def filter_new(
             )
             return definitely_new.unionByName(new_survivors)
 
-    if seen_buckets is not None and "bucket" in seen.columns:
-        surv_keys = survivors.select("key_hash").withColumn(
-            "bucket", F.pmod(F.col("key_hash"), F.lit(seen_buckets)).cast("int")
-        )
-        seen_side = seen.select("bucket", "key_hash")
-        if prune_buckets:
-            hit = [r["bucket"] for r in surv_keys.select("bucket").distinct().collect()]
-            seen_side = seen_side.filter(F.col("bucket").isin(hit))
-        confirmed = seen_side.join(
-            F.broadcast(surv_keys), ["bucket", "key_hash"], "left_semi"
-        )
-    else:
-        confirmed = seen.select("key_hash").join(
-            F.broadcast(survivors.select("key_hash")), "key_hash", "left_semi"
-        )
-    new_survivors = survivors.join(
-        F.broadcast(confirmed.select("key_hash")), "key_hash", "left_anti"
+    return definitely_new.unionByName(_confirm_new(survivors, seen))
+
+
+def _confirm_new(survivors: DataFrame, seen: DataFrame) -> DataFrame:
+    """The exact check shared by both filter_new paths: ``survivors``
+    rows whose key is not in ``seen``, without shuffling ``seen``."""
+    confirmed = seen.select("key_hash").join(
+        F.broadcast(survivors.select("key_hash")), "key_hash", "left_semi"
     )
-    return definitely_new.unionByName(new_survivors)
+    return survivors.join(F.broadcast(confirmed), "key_hash", "left_anti")

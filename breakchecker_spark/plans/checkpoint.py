@@ -40,9 +40,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 def partition_stats(path: str) -> Dict[str, tuple]:
     """Per-partition (files, rows, bytes) from parquet footers — no
     Spark job. Keys are the partition directory relative to the version
-    root ("bucket=7", nested "a=1/b=2", or "" for an unpartitioned
-    table). This is the raw material of the lineage table: who wrote
-    how much into which partition, observable at commit time for free
+    root: "" for the store's own (unpartitioned) writes; a file found
+    in a subdirectory gets its own key, so the integrity audit sees
+    it. This is the raw material of the lineage table: who wrote how
+    much into which partition, observable at commit time for free
     because the staging path already reads these footers for its
     returned row counts."""
     stats: Dict[str, tuple] = {}
@@ -114,40 +115,27 @@ class CheckpointStore:
     def _dir(self, table: str, version: int) -> str:
         return os.path.join(self.root, table, f"v{version}")
 
-    def _write(
-        self, table: str, df: DataFrame, version: int, partition_by: str | None = None
-    ) -> None:
+    def _write(self, table: str, df: DataFrame, version) -> None:
         path = self._dir(table, version)
         if os.path.exists(path):
             shutil.rmtree(path)  # orphan from a killed run
-        if partition_by is None:
-            # Size the output files instead of inheriting the plan's
-            # partitioning (guide §6): a per-round delta is often KB
-            # while the producing plan has core-count partitions, and
-            # local scans split per-file (files.minPartitionNum =
-            # parallelism defeats small-file packing) — so every
-            # downstream read of a 32-file KB-sized delta costs 32
-            # task schedules. AQE's rebalance writes one file for
-            # small deltas and ~advisory-size files at scale — the
-            # same adaptive rule both locally and on a cluster.
-            df = df.hint("rebalance")
-        writer = df.write.mode("overwrite")
-        if partition_by is not None:
-            # one shuffle of the (small) delta → one file per partition
-            # value per version; Iceberg's bucket-transform layout on
-            # plain parquet. Readers recover the column via per-version
-            # partition discovery (see read()).
-            writer = df.repartition(F.col(partition_by)).write.mode(
-                "overwrite"
-            ).partitionBy(partition_by)
+        # Size the output files instead of inheriting the plan's
+        # partitioning (guide §6): a per-round delta is often KB while
+        # the producing plan has core-count partitions, and local scans
+        # split per-file (files.minPartitionNum = parallelism defeats
+        # small-file packing) — so every downstream read of a 32-file
+        # KB-sized delta costs 32 task schedules. AQE's rebalance
+        # writes one file for small deltas and ~advisory-size files at
+        # scale — the same adaptive rule both locally and on a cluster.
+        # A zero-row write still leaves one file carrying the schema.
+        #
         # snappy, deliberately: an interleaved 100k-page A/B measured
         # zstd at 128.6 s vs snappy at 45.0 s for the same crawl —
         # zstd-jni pays a per-file setup cost that dominates when a
-        # round stages ~128 small delta files (32 buckets × 4 tables).
-        # At real cluster scale with large files zstd wins on bytes;
-        # flip via SPARK_GRAFT_CKPT_CODEC.
-        writer.option(
-            "compression", os.environ.get("SPARK_GRAFT_CKPT_CODEC", "snappy")
+        # round stages many small delta files. At real cluster scale
+        # with large files zstd wins on bytes.
+        df.hint("rebalance").write.mode("overwrite").option(
+            "compression", "snappy"
         ).parquet(path)
 
     def _write_rows(self, table: str, rows: List[dict], schema, version) -> None:
@@ -178,21 +166,10 @@ class CheckpointStore:
         self._pending[table] = [round_no]
         return self._record_lineage(table, round_no)
 
-    def stage_append(
-        self,
-        table: str,
-        df: DataFrame,
-        round_no: int,
-        partition_by: str | None = None,
-    ) -> int:
+    def stage_append(self, table: str, df: DataFrame, round_no: int) -> int:
         """Write only this round's delta; readers union all versions.
-        Returns the delta row count (from parquet footers, no job).
-
-        ``partition_by`` lays the delta out as <dir>/<col>=<v>/ files —
-        the plain-parquet analogue of Iceberg bucket partitioning; the
-        url_seen table uses it with a key_hash bucket so membership
-        probes can prune buckets and never shuffle the seen side."""
-        self._write(table, df, round_no, partition_by=partition_by)
+        Returns the delta row count (from parquet footers, no job)."""
+        self._write(table, df, round_no)
         # chain off an earlier same-commit staging (compaction) if any
         base = self._pending.get(table, self._committed_versions(table))
         self._pending[table] = list(base) + [round_no]
@@ -211,12 +188,6 @@ class CheckpointStore:
         tables = dict(m["tables"])
         tables.update(self._pending)
         if self._pending_lineage:
-            committed = list(tables.get("lineage", []))
-            # same-round recommits (e.g. a resume-time rewrite) get a
-            # distinct version dir so read() never unions one dir twice
-            tag = round_no
-            while tag in committed or str(tag) in map(str, committed):
-                tag = f"{tag}l"
             rows = [
                 {
                     "round": round_no,
@@ -230,8 +201,8 @@ class CheckpointStore:
                 for (table, version), stats in sorted(self._pending_lineage.items())
                 for part, (files, nrows, nbytes) in sorted(stats.items())
             ]
-            self._write_rows("lineage", rows, LINEAGE_ARROW, tag)
-            tables["lineage"] = committed + [tag]
+            self._write_rows("lineage", rows, LINEAGE_ARROW, round_no)
+            tables["lineage"] = list(tables.get("lineage", [])) + [round_no]
         manifest = {"round": round_no, "tables": tables}
         if extra:
             manifest.update(extra)
@@ -260,58 +231,24 @@ class CheckpointStore:
         self._pending[table] = list(base) + [round_no]
         return self._record_lineage(table, round_no)
 
-    def stage_rewrite(
-        self,
-        table: str,
-        df: DataFrame,
-        tag: str | int,
-        partition_by: str | None = None,
-    ) -> str:
-        """Stage a full rewrite of an append table as its only version.
-
-        Used for one-time layout migrations (e.g. re-deriving the
-        url_seen bucket column after a ``seen_buckets`` config change);
-        published atomically by the next commit(), exactly like
-        compact(). Returns the staged directory path so the caller can
-        re-read it (truncating plan lineage)."""
-        self._write(table, df, tag, partition_by=partition_by)
-        self._pending[table] = [tag]
-        self._record_lineage(table, tag)
-        return self._dir(table, tag)
-
     def compact(
-        self,
-        spark: SparkSession,
-        table: str,
-        round_no: int,
-        partition_by: str | None = None,
-        min_versions: int = 8,
+        self, spark: SparkSession, table: str, round_no: int, min_versions: int = 8
     ) -> bool:
         """Merge an append table's committed versions into one.
 
         The Iceberg ``rewrite_data_files`` maintenance analogue: after
-        many rounds an append table is hundreds of small delta files
-        (versions × buckets for url_seen); readers pay listing + open
-        cost per file. Compaction reads every live version and writes
-        one consolidated version dir (tagged ``<round>c``), staged as
-        the only live version; the round's own delta then appends on
-        top of it and the next commit() publishes both atomically — a
-        kill mid-compaction leaves the old manifest and every old
-        version dir intact. Superseded dirs are removed by gc() after
-        the commit.
+        many rounds an append table is hundreds of small delta files;
+        readers pay listing + open cost per file. Compaction reads every
+        live version and writes one consolidated version dir (tagged
+        ``<round>c``), staged as the only live version; the round's own
+        delta then appends on top of it and the next commit() publishes
+        both atomically — a kill mid-compaction leaves the old manifest
+        and every old version dir intact. Superseded dirs are removed by
+        gc() after the commit.
 
         No-op (returns False) unless the table has ≥ ``min_versions``
         committed versions. Call before stage_append for the round.
-
-        Skipped when a rewrite is already pending for the table (e.g.
-        the resume-time rebucket in plans/crawl.py): that rewrite is
-        itself a single consolidated version, and reading committed
-        (pre-rewrite) versions here would both clobber the pending
-        rewrite and — when the old layout lacked the partition column —
-        crash on repartition. The rewrite subsumes the compaction.
         """
-        if table in self._pending:
-            return False
         versions = self._committed_versions(table)
         if len(versions) < min_versions:
             return False
@@ -319,7 +256,7 @@ class CheckpointStore:
         if df is None:
             return False
         tag = f"{round_no}c"
-        self._write(table, df, tag, partition_by=partition_by)
+        self._write(table, df, tag)
         self._pending[table] = [tag]
         self._record_lineage(table, tag)
         return True
@@ -410,22 +347,9 @@ class CheckpointStore:
     def read(self, spark: SparkSession, table: str) -> Optional[DataFrame]:
         """Read a table at its last committed state (None if absent).
 
-        Each version is read separately (its own partition-discovery
-        basePath, so directory-partition columns like bucket= are
-        recovered) and unioned by name — the Iceberg-manifest read
-        pattern on plain parquet."""
+        Each version is read separately and unioned by name — the
+        Iceberg-manifest read pattern on plain parquet."""
         versions = self._committed_versions(table)
-        if not versions:
-            return None
-        # a zero-row partitionBy write leaves no data files — such a
-        # version contributed nothing; skip it (schema can't be read)
-        versions = [
-            v
-            for v in versions
-            if glob.glob(
-                os.path.join(self._dir(table, v), "**", "*.parquet"), recursive=True
-            )
-        ]
         if not versions:
             return None
         dfs = [spark.read.parquet(self._dir(table, v)) for v in versions]
@@ -466,13 +390,7 @@ class MemoryStore:
         self._pending[table] = [self._checkpoint(df)]
         return self._pending[table][0][1]
 
-    def stage_append(
-        self,
-        table: str,
-        df: DataFrame,
-        round_no: int,
-        partition_by: str | None = None,
-    ) -> int:
+    def stage_append(self, table: str, df: DataFrame, round_no: int) -> int:
         return self._append(table, self._checkpoint(df))
 
     def stage_append_rows(
@@ -487,15 +405,9 @@ class MemoryStore:
         return self._append(table, (df, len(rows)))
 
     def compact(
-        self,
-        spark: SparkSession,
-        table: str,
-        round_no: int,
-        partition_by: str | None = None,
-        min_versions: int = 8,
+        self, spark: SparkSession, table: str, round_no: int, min_versions: int = 8
     ) -> bool:
-        versions = self._tables.get(table, [])
-        if table in self._pending or len(versions) < min_versions:
+        if len(self._tables.get(table, [])) < min_versions:
             return False
         # rebalance: fold the per-round partitions too, not just the plans
         df = self.read(spark, table).hint("rebalance").localCheckpoint(eager=True)

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions import contacts as contacts_fn
 from ..functions import udfs
 from ..operators import extract, politeness, seen
-from .checkpoint import CheckpointStore, MemoryStore, partition_stats
+from .checkpoint import CheckpointStore, MemoryStore
 
 _DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
 
@@ -84,16 +84,6 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom_parts: int = 32
     bloom_expected_per_part: int = 100_000
-    # url_seen bucket count: deltas are written directory-partitioned
-    # by pmod(key_hash, seen_buckets); the exact membership check never
-    # shuffles the seen side (operators/seen.py). 0 disables the
-    # bucketed layout.
-    seen_buckets: int = 32
-    # collect survivors' bucket list and push an explicit bucket IN
-    # partition filter into the seen scan (one extra driver action per
-    # round; worth it when the seen scan dominates — huge seen table,
-    # narrow rounds)
-    prune_seen_buckets: bool = False
     # broadcast-safety guard: fall back to a plain anti-join for a round
     # whose bloom-surviving candidates exceed this (None disables)
     seen_broadcast_max_rows: Optional[int] = 4_000_000
@@ -240,6 +230,15 @@ def run_crawl(
     bloom_table = None
     manifest = store.manifest()
     if resume and manifest is not None:
+        if manifest.get("seen_buckets", 0):
+            # url_seen deltas written with a bucket column (and possibly
+            # bucket directories) by an earlier layout; unioning them
+            # with bucketless deltas would fail mid-crawl
+            raise ValueError(
+                "checkpoint was written with the bucketed url_seen layout "
+                f"(seen_buckets={manifest['seen_buckets']}), which this "
+                "engine no longer reads; start a fresh run"
+            )
         if config.verify_checkpoint:
             problems = store.verify_integrity()
             if problems:
@@ -252,41 +251,10 @@ def run_crawl(
         frontier_rows = manifest.get("frontier_rows", -1)
         frontier = store.read(spark, "frontier")
         url_seen = store.read(spark, "url_seen")
-        ckpt_buckets = manifest.get("seen_buckets", 0)
-        want_buckets = config.seen_buckets or 0
-        if url_seen is not None and ckpt_buckets != want_buckets:
-            # Checkpoint written under a different bucket modulus (or a
-            # legacy manifest without the field): on-disk bucket values
-            # no longer equal pmod(key_hash, N), so the (bucket,
-            # key_hash) membership semi-join would silently miss seen
-            # keys and re-crawl them. Re-derive the column and stage a
-            # one-time rewrite, published atomically with this round's
-            # commit (a kill before that leaves the old state intact).
-            if "bucket" in url_seen.columns:
-                url_seen = url_seen.drop("bucket")
-            if want_buckets:
-                url_seen = url_seen.withColumn(
-                    "bucket",
-                    F.pmod(F.col("key_hash"), F.lit(want_buckets)).cast("int"),
-                )
-            rb_path = store.stage_rewrite(
-                "url_seen",
-                url_seen,
-                f"{start_round}rb",
-                partition_by=(
-                    "bucket"
-                    if want_buckets and config.prune_seen_buckets
-                    else None
-                ),
-            )
-            if partition_stats(rb_path):  # a zero-row rewrite has no files
-                url_seen = spark.read.parquet(rb_path)
         all_contacts = store.read(spark, "contacts")
         metrics = store.read(spark, "metrics")
         bloom_table = store.read(spark, "bloom") if config.use_bloom else None
         if config.use_bloom and bloom_table is None and url_seen is not None:
-            # (bloom keys are key_hash only — bucketing changes above
-            # don't invalidate a committed filter)
             # Checkpoint was written with use_bloom=False. The round loop
             # ORs per-round deltas into the running filter, so a None
             # start would make round-1's delta-only bloom masquerade as
@@ -302,10 +270,7 @@ def run_crawl(
             # or the append-table manifest would leak prior-run versions
             store.reset()
         frontier = _dedup_frontier(seeds_to_frontier(seeds))
-        seen_schema = "key_hash long, url string, depth int"
-        if config.seen_buckets:
-            seen_schema += ", bucket int"
-        url_seen = spark.createDataFrame([], seen_schema)
+        url_seen = spark.createDataFrame([], "key_hash long, url string, depth int")
         all_contacts = spark.createDataFrame(
             [], "kind string, identifier string, source_url string, depth int"
         )
@@ -313,13 +278,6 @@ def run_crawl(
             [], "run_id string, round int, metric string, value long"
         )
 
-    # url_seen physical layout: bucket DIRECTORIES exist to serve the
-    # opt-in scan pruning (prune_seen_buckets); without it they cost
-    # one file per bucket per round for nothing — the bucket membership
-    # column itself is staged either way (r6, guide §6 file sizing).
-    _seen_layout = (
-        "bucket" if config.seen_buckets and config.prune_seen_buckets else None
-    )
     host_budgets = None
     if robots is not None and config.round_seconds is not None:
         host_budgets = politeness.crawl_delay_budgets(robots, config.round_seconds)
@@ -389,11 +347,6 @@ def run_crawl(
         # membership, url/depth carry reporting — the string key would
         # double the staged bytes per round for nothing.
         new_seen = eligible.select("key_hash", "url", "depth")
-        if config.seen_buckets:
-            new_seen = new_seen.withColumn(
-                "bucket",
-                F.pmod(F.col("key_hash"), F.lit(config.seen_buckets)).cast("int"),
-            )
         url_seen_next = url_seen.unionByName(new_seen)
 
         # 4. fetch = left join against the pages table. Dead hosts are
@@ -556,9 +509,7 @@ def run_crawl(
                 url_seen_next,
                 bloom_next,
                 config.bloom_parts,
-                seen_buckets=config.seen_buckets or None,
                 cache_registry=round_caches,
-                prune_buckets=config.prune_seen_buckets,
                 max_broadcast_rows=config.seen_broadcast_max_rows,
                 candidate_bound=candidate_bound,
                 probe_min_candidates=config.probe_min_candidates,
@@ -583,11 +534,7 @@ def run_crawl(
             # round's atomic commit; old dirs gc'd after).
             for table in ("url_seen", "contacts", "metrics", "lineage"):
                 store.compact(
-                    spark,
-                    table,
-                    round_no,
-                    partition_by=_seen_layout if table == "url_seen" else None,
-                    min_versions=config.compact_every,
+                    spark, table, round_no, min_versions=config.compact_every
                 )
             tt = _tlog(f"r{round_no} compact", t0)
         # Stage contacts first: it materializes every shared cache
@@ -620,13 +567,7 @@ def run_crawl(
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=4) as pool:
-            f_seen = pool.submit(
-                store.stage_append,
-                "url_seen",
-                new_seen,
-                round_no,
-                _seen_layout,
-            )
+            f_seen = pool.submit(store.stage_append, "url_seen", new_seen, round_no)
             f_frontier = pool.submit(
                 lambda: store.stage_replace(
                     "frontier",
@@ -666,14 +607,7 @@ def run_crawl(
         )
         tt = _tlog(f"r{round_no} stage metrics", tt)
         store.commit(
-            round_no,
-            {
-                "run_id": config.run_id,
-                "frontier_rows": frontier_rows,
-                # bucket modulus the url_seen layout was written
-                # with — validated on resume (rebucket on mismatch)
-                "seen_buckets": config.seen_buckets or 0,
-            },
+            round_no, {"run_id": config.run_id, "frontier_rows": frontier_rows}
         )
         store.gc()  # drop compacted-away / orphan version dirs
         frontier = store.read(spark, "frontier")

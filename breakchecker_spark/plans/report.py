@@ -1,4 +1,4 @@
-"""Report sinks + summary aggregates (reference S9-S11, A5).
+"""Report builder + sinks (reference S9-S11, A5).
 
 The reference shapes a nested dict and writes JSON/CSV/Markdown
 (/root/reference/break_checker.py:1569-1691, results dict 1798-1816).
@@ -22,39 +22,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import udfs
 
 
-def summarize(url_seen: DataFrame, contacts: DataFrame, metrics: DataFrame) -> dict:
-    """Summary block matching the reference's results shape
-    (break_checker.py:1613-1622): endpoint/subdomain/contact counts +
-    kept/dropped counters, all exact DataFrame aggregations."""
-    n_endpoints = url_seen.count()
-    n_subdomains = (
-        url_seen.select(udfs.url_host(F.col("url")).alias("h")).distinct().count()
-    )
-    kind_counts = {
-        r["kind"]: r["n"]
-        for r in contacts.groupBy("kind").agg(F.count("*").alias("n")).collect()
-    }
-    dropped = {
-        r["metric"]: r["v"]
-        for r in metrics.filter(
-            F.col("metric").isin("emails_dropped", "phones_dropped")
-        )
-        .groupBy("metric")
-        .agg(F.sum("value").alias("v"))
-        .collect()
-    }
-    # key order mirrors the reference's summary dict insertion order
-    # (break_checker.py:1613-1622) — CSV/markdown render it as-is
-    return {
-        "num_subdomains": n_subdomains,
-        "num_endpoints": n_endpoints,
-        "num_emails": kind_counts.get("email", 0),
-        "num_phones": kind_counts.get("phone", 0),
-        "emails_dropped": int(dropped.get("emails_dropped", 0)),
-        "phones_dropped": int(dropped.get("phones_dropped", 0)),
-    }
-
-
 def build_report(
     domain: str,
     url_seen: DataFrame,
@@ -68,7 +35,11 @@ def build_report(
     emails by address, phones by number, subdomains sorted —
     break_checker.py:1601-1630; top-level scan_domain/scan_start/
     scan_end/scan_duration keys per break_checker.py:1614-1622,
-    timestamps formatted '%Y-%m-%d %H:%M:%S %Z' UTC per bc:1810-1816)."""
+    timestamps formatted '%Y-%m-%d %H:%M:%S %Z' UTC per bc:1810-1816).
+
+    The summary block counts what is already collected here (hosts,
+    contact rows); only the endpoint count and the dropped counters
+    are separate aggregations."""
     rows = contacts_with_breaches.orderBy("kind", "identifier").collect()
     emails = [
         {
@@ -94,18 +65,26 @@ def build_report(
         .distinct()
         .collect()
     )
-    summary = summarize(url_seen, contacts_with_breaches, metrics)
-    # reference inserts breach counts between num_phones and *_dropped
-    # (break_checker.py:1613-1622)
+    dropped = {
+        r["metric"]: r["v"]
+        for r in metrics.filter(
+            F.col("metric").isin("emails_dropped", "phones_dropped")
+        )
+        .groupBy("metric")
+        .agg(F.sum("value").alias("v"))
+        .collect()
+    }
+    # key order mirrors the reference's summary dict insertion order
+    # (break_checker.py:1613-1622) — CSV/markdown render it as-is
     summary = {
-        "num_subdomains": summary["num_subdomains"],
-        "num_endpoints": summary["num_endpoints"],
-        "num_emails": summary["num_emails"],
-        "num_phones": summary["num_phones"],
+        "num_subdomains": len(subdomains),
+        "num_endpoints": url_seen.count(),
+        "num_emails": len(emails),
+        "num_phones": len(phones),
         "num_breached_emails": sum(1 for e in emails if e["breaches"]),
         "num_breached_phones": sum(1 for p in phones if p["breaches"]),
-        "emails_dropped": summary["emails_dropped"],
-        "phones_dropped": summary["phones_dropped"],
+        "emails_dropped": int(dropped.get("emails_dropped", 0)),
+        "phones_dropped": int(dropped.get("phones_dropped", 0)),
     }
     return {
         "scan_domain": domain,

@@ -571,7 +571,7 @@ def neardup_component_clusters(spark, sf_dir):
 
 def seen_filter_new(spark, sf_dir):
     """The engine's actual URL-seen membership plan (bloom cogroup →
-    bucketed broadcast semi-confirm → broadcast anti) run over real
+    broadcast semi-confirm → broadcast anti) run over real
     parquet, vs a plain NOT IN oracle: proves the custom path
     value-exact under the driver gate, not just test-exact.
 
@@ -590,16 +590,9 @@ def seen_filter_new(spark, sf_dir):
         .select("user_id")
         .distinct()
         .select(F.xxhash64("user_id").alias("key_hash"))
-        .withColumn("bucket", F.pmod(F.col("key_hash"), F.lit(8)).cast("int"))
     )
     bloom_table = seen_ops.build_bloom(seen_df, n_parts=8, expected_per_part=50_000)
-    out = seen_ops.filter_new(
-        cands,
-        seen_df,
-        bloom_table,
-        n_parts=8,
-        seen_buckets=8,
-    )
+    out = seen_ops.filter_new(cands, seen_df, bloom_table, n_parts=8)
     return out.select("user_id").orderBy("user_id")
 
 

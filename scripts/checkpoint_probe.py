@@ -1,6 +1,6 @@
 """50-round checkpoint-store depth probe (VERDICT r4 item #7).
 
-Compaction/gc/rebucket are correctness-tested but were never measured
+Compaction/gc are correctness-tested but were never measured
 at depth: this runner drives a 50-round synthetic crawl (a URL chain —
 one page per round, so every observed cost is the store's, not the
 engine's per-row work), with ``compact_every=8``, and records:

@@ -70,44 +70,6 @@ def test_kill_between_compact_and_commit_is_safe(spark, tmp_path):
     assert store2.read(spark, "t").count() == 3
 
 
-def test_compact_skips_table_with_pending_rewrite(spark, tmp_path):
-    """A staged rewrite (resume-time rebucket) must not be clobbered by
-    a same-commit compaction: compact() reading only COMMITTED (old
-    layout) versions would overwrite _pending with stale-bucket data —
-    silent seen-misses downstream (ADVICE r3). compact() now defers."""
-    root = str(tmp_path / "s4")
-    store = CheckpointStore(root)
-    for r in range(3):
-        df = spark.range(r * 10, r * 10 + 10).select(
-            F.col("id").alias("key_hash"),
-            F.pmod("id", F.lit(4)).cast("int").alias("bucket"),
-        )
-        store.stage_append("t", df, r, partition_by="bucket")
-        store.commit(r)
-    # rebucket to modulus 8, staged but not yet committed
-    rewritten = store.read(spark, "t").drop("bucket").withColumn(
-        "bucket", F.pmod("key_hash", F.lit(8)).cast("int")
-    )
-    store.stage_rewrite("t", rewritten, "3rb", partition_by="bucket")
-    assert store.compact(spark, "t", 3, partition_by="bucket", min_versions=2) is False
-    assert store._pending["t"] == ["3rb"]
-    # the round's delta chains on top of the rewrite and commits cleanly
-    delta = spark.range(100, 110).select(
-        F.col("id").alias("key_hash"),
-        F.pmod("id", F.lit(8)).cast("int").alias("bucket"),
-    )
-    store.stage_append("t", delta, 3, partition_by="bucket")
-    store.commit(3)
-    out = store.read(spark, "t")
-    assert out.count() == 40
-    assert (
-        out.filter(
-            F.col("bucket") != F.pmod("key_hash", F.lit(8)).cast("int")
-        ).count()
-        == 0
-    )
-
-
 def test_memory_store_matches_checkpoint_store(spark, tmp_path):
     """Both stores through one stage → commit → read → compact sequence
     (replace, append, driver-side rows, zero-row stages): same returned

@@ -263,98 +263,47 @@ def test_resume_bloom_on_over_bloomless_checkpoint(spark, pages_df, seeds_df, tm
     assert _engine_contacts(resumed) == _engine_contacts(full)
 
 
-def test_resume_rebuckets_on_seen_buckets_change(
+def test_resume_landing_on_compaction_round(
     spark, pages_df, seeds_df, tmp_path
 ):
-    """Resume under a different ``seen_buckets`` than the checkpoint
-    was written with: on-disk bucket values used the old modulus, so
-    the (bucket, key_hash) membership semi-join would silently miss
-    seen keys and re-crawl them (ADVICE r2). The manifest records the
-    modulus and resume re-derives the column."""
-    ckpt = str(tmp_path / "ckpt_rebucket")
-    base = dict(scope_host=fixture_web.SCOPE, max_depth=3, use_bloom=True,
-                bloom_parts=4, bloom_expected_per_part=1000)
-
-    full = run_crawl(spark, seeds_df, pages_df, CrawlConfig(**base, seen_buckets=4))
-
-    cfg_kill = CrawlConfig(**base, seen_buckets=4, checkpoint_dir=ckpt, max_rounds=2)
-    run_crawl(spark, seeds_df, pages_df, cfg_kill)
-    cfg_resume = CrawlConfig(**base, seen_buckets=16, checkpoint_dir=ckpt)
-    resumed = run_crawl(spark, seeds_df, pages_df, cfg_resume, resume=True)
-
-    assert _engine_visited(resumed) == _engine_visited(full)
-    n = resumed.url_seen.count()
-    assert n == resumed.url_seen.select("key_hash").distinct().count()
-    assert _engine_contacts(resumed) == _engine_contacts(full)
-    # every row's bucket matches the new modulus
-    from pyspark.sql import functions as F
-
-    bad = resumed.url_seen.filter(
-        F.col("bucket") != F.pmod(F.col("key_hash"), F.lit(16)).cast("int")
-    ).count()
-    assert bad == 0
-
-
-def test_resume_rebucket_landing_on_compaction_round(
-    spark, pages_df, seeds_df, tmp_path
-):
-    """Resume with a changed seen_buckets where the FIRST resumed round
-    is also a compaction round: compaction must defer to the staged
-    rebucket instead of clobbering it with old-modulus data (ADVICE
-    r3, crawl.py/checkpoint.py). host_budget=1 stretches the crawl so
+    """Resume where the FIRST resumed round is also a compaction round:
+    the compaction folds the checkpoint's committed versions and the
+    round's delta appends on top. host_budget=1 stretches the crawl so
     round 5 exists; (5+1) % compact_every==0 with 5 ≥ min_versions
-    fires the url_seen compact exactly when the rebucket is pending."""
-    ckpt = str(tmp_path / "ckpt_rb_compact")
+    fires the url_seen compact on the first resumed round."""
+    ckpt = str(tmp_path / "ckpt_compact")
     base = dict(scope_host=fixture_web.SCOPE, max_depth=3, host_budget=1,
-                use_bloom=True, bloom_parts=4, bloom_expected_per_part=1000)
+                use_bloom=True, bloom_parts=4, bloom_expected_per_part=1000,
+                compact_every=3)
 
-    full = run_crawl(
-        spark, seeds_df, pages_df,
-        CrawlConfig(**base, seen_buckets=4, compact_every=3),
-    )
+    full = run_crawl(spark, seeds_df, pages_df, CrawlConfig(**base))
     assert full.rounds > 5
 
-    cfg_kill = CrawlConfig(
-        **base, seen_buckets=4, compact_every=3, checkpoint_dir=ckpt,
-        max_rounds=5,
-    )
+    cfg_kill = CrawlConfig(**base, checkpoint_dir=ckpt, max_rounds=5)
     run_crawl(spark, seeds_df, pages_df, cfg_kill)
-    cfg_resume = CrawlConfig(
-        **base, seen_buckets=16, compact_every=3, checkpoint_dir=ckpt
-    )
+    cfg_resume = CrawlConfig(**base, checkpoint_dir=ckpt)
     resumed = run_crawl(spark, seeds_df, pages_df, cfg_resume, resume=True)
 
     assert _engine_visited(resumed) == _engine_visited(full)
     n = resumed.url_seen.count()
     assert n == resumed.url_seen.select("key_hash").distinct().count()
     assert _engine_contacts(resumed) == _engine_contacts(full)
-    from pyspark.sql import functions as F
-
-    bad = resumed.url_seen.filter(
-        F.col("bucket") != F.pmod(F.col("key_hash"), F.lit(16)).cast("int")
-    ).count()
-    assert bad == 0
 
 
-def test_resume_buckets_over_bucketless_checkpoint(
-    spark, pages_df, seeds_df, tmp_path
-):
-    """Legacy checkpoint written with seen_buckets=0 resumed under the
-    bucketed default: the missing ``bucket`` column must be derived,
-    not crash unionByName (ADVICE r2)."""
-    ckpt = str(tmp_path / "ckpt_bucketless")
-    base = dict(scope_host=fixture_web.SCOPE, max_depth=3, use_bloom=True,
-                bloom_parts=4, bloom_expected_per_part=1000)
+def test_resume_refuses_bucketed_checkpoint(spark, pages_df, seeds_df, tmp_path):
+    """A checkpoint whose manifest records the removed bucketed
+    url_seen layout (seen_buckets > 0) carries a bucket column that
+    bucketless deltas cannot union with: resume refuses it up front."""
+    import json
 
-    full = run_crawl(spark, seeds_df, pages_df, CrawlConfig(**base, seen_buckets=8))
-
-    cfg_kill = CrawlConfig(**base, seen_buckets=0, checkpoint_dir=ckpt, max_rounds=2)
-    run_crawl(spark, seeds_df, pages_df, cfg_kill)
-    cfg_resume = CrawlConfig(**base, seen_buckets=8, checkpoint_dir=ckpt)
-    resumed = run_crawl(spark, seeds_df, pages_df, cfg_resume, resume=True)
-
-    assert _engine_visited(resumed) == _engine_visited(full)
-    assert _engine_contacts(resumed) == _engine_contacts(full)
+    ckpt = tmp_path / "ckpt_bucketed"
+    ckpt.mkdir()
+    manifest = {"round": 1, "tables": {}, "run_id": "run0",
+                "frontier_rows": 3, "seen_buckets": 32}
+    (ckpt / "_manifest.json").write_text(json.dumps(manifest))
+    cfg = CrawlConfig(scope_host=fixture_web.SCOPE, checkpoint_dir=str(ckpt))
+    with pytest.raises(ValueError, match="seen_buckets"):
+        run_crawl(spark, seeds_df, pages_df, cfg, resume=True)
 
 
 def test_metrics_recorded(spark, pages_df, seeds_df):

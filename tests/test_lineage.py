@@ -43,10 +43,6 @@ def test_lineage_records_every_commit_per_partition(
         CrawlConfig(
             scope_host=fixture_web.SCOPE,
             max_depth=3,
-            seen_buckets=4,
-            # bucket DIRECTORIES are staged only when pruning wants
-            # them (r6); this test pins the partitioned-layout lineage
-            prune_seen_buckets=True,
             bloom_parts=4,
             bloom_expected_per_part=1000,
             checkpoint_dir=ckpt,
@@ -58,11 +54,11 @@ def test_lineage_records_every_commit_per_partition(
     # every checkpointed table appears in lineage
     assert {"url_seen", "contacts", "metrics", "frontier", "bloom"} <= tables
 
-    # url_seen deltas are bucket-partitioned: their lineage rows carry
-    # the partition dir, and the per-partition row counts sum to the
-    # final table exactly
+    # url_seen deltas are unpartitioned: their lineage rows carry the
+    # empty partition dir, and their row counts sum to the final table
+    # exactly
     seen_rows = [r for r in rows if r["table"] == "url_seen"]
-    assert all(r["partition"].startswith("bucket=") for r in seen_rows)
+    assert all(r["partition"] == "" for r in seen_rows)
     assert sum(r["rows"] for r in seen_rows) == res.url_seen.count()
     assert all(r["files"] >= 1 and r["bytes"] > 0 for r in rows)
 
@@ -78,7 +74,6 @@ def test_resume_appends_lineage_and_verify_gate(spark, seeds_df, pages_df, tmp_p
     base = dict(
         scope_host=fixture_web.SCOPE,
         max_depth=3,
-        seen_buckets=4,
         bloom_parts=4,
         bloom_expected_per_part=1000,
         checkpoint_dir=ckpt,
@@ -126,7 +121,6 @@ def test_lineage_survives_compaction_and_gc(spark, seeds_df, pages_df, tmp_path)
         CrawlConfig(
             scope_host=fixture_web.SCOPE,
             max_depth=3,
-            seen_buckets=4,
             bloom_parts=4,
             bloom_expected_per_part=1000,
             checkpoint_dir=ckpt,

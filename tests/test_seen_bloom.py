@@ -159,15 +159,6 @@ def test_filter_new_probe_skip_equals_probed(spark, seen_and_candidates):
     assert "FlatMapCoGroupsInPandas" not in plan
     assert {r["url"] for r in skipped.select("url").collect()} == want
 
-    # bucketed seen side: same equality through the bucket semi join
-    seen_b = seen_df.withColumn(
-        "bucket", F.pmod(F.col("key_hash"), F.lit(8)).cast("int")
-    )
-    skipped_b = seen.filter_new(
-        cand, seen_b, bloom_table, 8, seen_buckets=8, candidate_bound=5000,
-    )
-    assert {r["url"] for r in skipped_b.select("url").collect()} == want
-
 
 def test_filter_new_guard_active_without_registry(spark, seen_and_candidates):
     """The max_broadcast_rows driver-OOM guard must fire even when no

@@ -99,7 +99,7 @@ from breakchecker_spark.sources import pagegen
 
 pages = pagegen.generate_pages(spark, 60, partitions=4)
 cfg = CrawlConfig(scope_host=pagegen.ORG, max_depth=4, pre_extract=True,
-                  bloom_parts=4, bloom_expected_per_part=1000, seen_buckets=4)
+                  bloom_parts=4, bloom_expected_per_part=1000)
 res = run_crawl(spark, pagegen.seeds_df(spark), pages, cfg)
 assert res.summary["num_endpoints"] > 0
 print("CRAWL_OK", res.summary["num_endpoints"], res.contacts.count())
