@@ -78,6 +78,9 @@ def make_runner(pages_path: str, breach_db_path: str | None = None):
 
     spark = get_spark(app_name="breakchecker_api")
     pages = spark.read.parquet(pages_path).cache()
+    # the pages table is fixed for the runner's lifetime: its liveness
+    # table is built once, not per request
+    hosts = seeds_mod.host_schemes(pages).cache()
     breach_db = (
         spark.read.parquet(breach_db_path) if breach_db_path else None
     )
@@ -93,7 +96,7 @@ def make_runner(pages_path: str, breach_db_path: str | None = None):
         start_dt = datetime.datetime.now(datetime.timezone.utc)
         domain = seeds_mod.validate_domain(domain)
         seeds = seeds_mod.live_hosts(
-            seeds_mod.union_seed_sources(spark, [], domain), pages
+            seeds_mod.union_seed_sources(spark, [], domain), hosts
         )
         result = run_crawl(
             spark,
@@ -118,9 +121,8 @@ def make_runner(pages_path: str, breach_db_path: str | None = None):
         end_dt = datetime.datetime.now(datetime.timezone.utc)
         return report_mod.build_report(
             domain,
-            result.url_seen,
+            result,
             contacts,
-            result.metrics,
             scan_start=start_dt.strftime(ts_format),
             scan_end=end_dt.strftime(ts_format),
             scan_duration=time_mod.time() - start_time,

@@ -161,7 +161,8 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         raw_seeds = seeds_mod.live_hosts(
-            seeds_mod.union_seed_sources(spark, seed_sources, domain), pages
+            seeds_mod.union_seed_sources(spark, seed_sources, domain),
+            seeds_mod.host_schemes(pages),
         )
     robots = spark.read.parquet(args.robots) if args.robots else None
     live_fetcher = None
@@ -217,9 +218,8 @@ def main(argv: list[str] | None = None) -> int:
     end_dt = datetime.datetime.now(datetime.timezone.utc)
     rep = report_mod.build_report(
         domain,
-        result.url_seen,
+        result,
         contacts,
-        result.metrics,
         scan_start=start_dt.strftime(ts_format),
         scan_end=end_dt.strftime(ts_format),
         scan_duration=time_mod.time() - start_time,

@@ -49,10 +49,13 @@ class DropCounters:
         ]
 
 class PreDrops:
-    """:class:`DropCounters` twin for the pre-extracted path: dropped
-    counts come pre-aggregated per page from the pre-extraction pass
-    and are summed per round by an Observation on the frontier⋈pre
-    join — same in-band, no-extra-job contract."""
+    """:class:`DropCounters` twin for the fused extraction stage: dropped
+    counts come pre-aggregated per page (from the pre-extraction pass,
+    or the round's own fused stage) and are summed per round by an
+    Observation on the round's extracted rows — same in-band,
+    no-extra-job contract. The same Observation sums the round's
+    emitted links (``nl``), which upper-bounds its enqueue-time
+    candidates."""
 
     def __init__(self, obs: Observation) -> None:
         self._obs = obs
@@ -63,6 +66,11 @@ class PreDrops:
             ("emails_dropped", int(m["ed"])),
             ("phones_dropped", int(m["pd"])),
         ]
+
+    def candidate_bound(self) -> int:
+        """Links emitted this round (≥ its distinct link candidates);
+        blocks like :meth:`get`. Not a metrics row."""
+        return int(self._obs.get["nl"])
 
 
 _JS_PATH = r"\.m?js$"
@@ -119,9 +127,10 @@ def process_pages(
     * contacts: (kind, identifier, source_url, depth) normalized, org-
       scoped (emails) / region-validated (phones);
     * drops: exact kept/dropped counts (reference counters
-      bc:1238-1241), observed inside the action that materializes
-      contacts (no separate aggregation job; call ``drops.get()`` only
-      after that action);
+      bc:1238-1241) and the round's emitted-link count
+      (``drops.candidate_bound()``), observed inside the action that
+      materializes contacts (no separate aggregation job; read them
+      only after that action);
     * caches: cached intermediate DataFrames — caller unpersists them
       once the round's outputs are materialized.
 
@@ -158,6 +167,7 @@ def process_pages(
         drop_obs,
         F.coalesce(F.sum("emails_dropped"), F.lit(0)).alias("ed"),
         F.coalesce(F.sum("phones_dropped"), F.lit(0)).alias("pd"),
+        F.coalesce(F.sum(F.size("links")), F.lit(0)).alias("nl"),
     )
     link_candidates = (
         observed.select(

@@ -206,7 +206,7 @@ def filter_new(
     None disables the guard.
 
     ``candidate_bound``: driver-known upper bound on candidate rows
-    (e.g. the frontier row count from checkpoint footers). When it is
+    (the crawl passes its round's emitted-link count, observed in-band). When it is
     already ≤ the threshold the broadcast is safe by construction and
     the count job is skipped — keeps the guard free on the common
     small-round path.

@@ -55,6 +55,15 @@ def partition_stats(path: str) -> Dict[str, tuple]:
     return stats
 
 
+def materialize(df: DataFrame) -> tuple:
+    """(checkpointed df, rows): one eager ``localCheckpoint`` that
+    evaluates ``df`` once and truncates its lineage; the row count
+    comes from an Observation riding that same job (no count job)."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return df, int(obs.get["n"])
+
+
 # per-partition lineage rows, written driver-side at commit (no Spark
 # job — same pyarrow fast path as the metrics table). One row per
 # (staged table version, partition dir) per commit; history survives
@@ -375,23 +384,17 @@ class MemoryStore:
     def manifest(self) -> None:
         return None  # nothing to resume from
 
-    @staticmethod
-    def _checkpoint(df: DataFrame) -> tuple:
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-        return df, int(obs.get["n"])
-
     def _append(self, table: str, version: tuple) -> int:
         base = self._pending.get(table, self._tables.get(table, []))
         self._pending[table] = base + [version]
         return version[1]
 
     def stage_replace(self, table: str, df: DataFrame, round_no: int) -> int:
-        self._pending[table] = [self._checkpoint(df)]
+        self._pending[table] = [materialize(df)]
         return self._pending[table][0][1]
 
     def stage_append(self, table: str, df: DataFrame, round_no: int) -> int:
-        return self._append(table, self._checkpoint(df))
+        return self._append(table, materialize(df))
 
     def stage_append_rows(
         self,

@@ -20,12 +20,19 @@ rounds. Each round:
 5. **extract + expand** — vectorized extraction produces contacts and
    canonical link candidates at depth+1 (enqueue-time checks: depth
    gate, within-round struct-key dedup pinned to min (depth, url),
-   anti-join vs seen and vs queued — bc:1397-1421);
+   anti-join vs seen and vs queued — bc:1397-1421). The extraction
+   observes the round's emitted-link count in-band, in both modes; that
+   bound lets small rounds skip the bloom probe and the broadcast
+   guard's count job;
 6. **commit** — frontier / url_seen / contacts / metrics deltas stage
    and commit atomically through one store interface: on disk with a
    checkpoint dir (a killed run resumes from the last commit), else in
    memory. Reading state back from the store also truncates plan
    lineage, keeping per-round shuffle count flat as depth grows.
+
+The seed frontier is materialized once, before round 0, so its row
+count is known up front and no round re-runs the seed plan (liveness,
+struct keys) behind it.
 
 Determinism pins (SURVEY.md §7): all seeds start at depth 0 together;
 within a round, candidate dedup order is (depth, url); the reference's
@@ -46,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions import contacts as contacts_fn
 from ..functions import udfs
 from ..operators import extract, politeness, seen
-from .checkpoint import CheckpointStore, MemoryStore
+from .checkpoint import CheckpointStore, MemoryStore, materialize
 
 _DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
 
@@ -87,9 +94,10 @@ class CrawlConfig:
     # broadcast-safety guard: fall back to a plain anti-join for a round
     # whose bloom-surviving candidates exceed this (None disables)
     seen_broadcast_max_rows: Optional[int] = 4_000_000
-    # skip the bloom-probe cogroup stage when the round's driver-known
-    # candidate bound is at or below this (seen.filter_new
-    # probe_min_candidates); 0 = always probe
+    # skip the bloom-probe cogroup stage when the round's candidate
+    # bound (its emitted-link count, observed in-band in both modes) is
+    # at or below this (seen.filter_new probe_min_candidates);
+    # 0 = always probe
     probe_min_candidates: int = 50_000
     # compact append tables (url_seen/contacts/metrics) every this many
     # rounds once they hold that many delta versions — the Iceberg
@@ -132,6 +140,8 @@ class CrawlResult:
     # per-partition commit lineage (round, table, version, partition,
     # files, rows, bytes) — None without a checkpoint dir
     lineage: Optional[DataFrame] = None
+    # sorted distinct hosts of the visited URLs (len = num_subdomains)
+    subdomains: list = field(default_factory=list)
 
 
 def _fetch_key(url_col):
@@ -226,7 +236,6 @@ def run_crawl(
     )
 
     start_round = 0
-    frontier_rows = -1  # unknown → check lazily
     bloom_table = None
     manifest = store.manifest()
     if resume and manifest is not None:
@@ -248,7 +257,7 @@ def run_crawl(
                     + (f" (+{len(problems) - 5} more)" if len(problems) > 5 else "")
                 )
         start_round = manifest["round"] + 1
-        frontier_rows = manifest.get("frontier_rows", -1)
+        frontier_rows = manifest["frontier_rows"]
         frontier = store.read(spark, "frontier")
         url_seen = store.read(spark, "url_seen")
         all_contacts = store.read(spark, "contacts")
@@ -269,7 +278,12 @@ def run_crawl(
             # fresh run over a dirty checkpoint dir: drop the old state,
             # or the append-table manifest would leak prior-run versions
             store.reset()
-        frontier = _dedup_frontier(seeds_to_frontier(seeds))
+        # evaluated once: every round-0 consumer (budget split, its
+        # deferred half, the frontier build) reads the checkpoint, not
+        # the seed plan's liveness join and struct-key UDF
+        frontier, frontier_rows = materialize(
+            _dedup_frontier(seeds_to_frontier(seeds))
+        )
         url_seen = spark.createDataFrame([], "key_hash long, url string, depth int")
         all_contacts = spark.createDataFrame(
             [], "kind string, identifier string, source_url string, depth int"
@@ -305,7 +319,7 @@ def run_crawl(
     rounds_run = start_round
 
     for round_no in range(start_round, config.max_rounds):
-        if frontier_rows == 0 or (frontier_rows < 0 and frontier.isEmpty()):
+        if frontier_rows == 0:
             break
         rounds_run = round_no + 1
         t0 = time.time()
@@ -446,12 +460,10 @@ def run_crawl(
             # side broadcastable (AQE picks broadcast from the cached
             # eligible stats), so the persisted pre table is scanned,
             # never shuffled, each round — the seen-join property again.
+            # "nl" rides along for free (as in process_pages): the
+            # total links emitted this round upper-bounds the
+            # enqueue-time candidate set
             drop_obs = Observation()
-            # "nl" rides along for free: the total links emitted this
-            # round upper-bounds the enqueue-time candidate set, so the
-            # broadcast guard inside the frontier build can skip its
-            # dedicated count job whenever the bound is under the
-            # threshold (r4 verdict item #2: per-round fixed cost).
             joined = keyed_input.join(pre, "_fk").observe(
                 drop_obs,
                 F.coalesce(F.sum("emails_dropped"), F.lit(0)).alias("ed"),
@@ -495,14 +507,14 @@ def run_crawl(
             .select("url", "depth", "host", "struct_key", "key_hash")
         )
 
-        def _build_frontier_next(candidate_bound: int | None = None) -> DataFrame:
+        def _build_frontier_next(candidate_bound: int) -> DataFrame:
             """Enqueue-time checks: not seen, not already queued.
 
-            ``candidate_bound``: an upper bound on the candidate rows
-            when the caller knows one (pre-extract mode observes the
-            round's total link count in-band on the contacts staging
-            job) — below the broadcast threshold the guard then costs
-            no count job at all.
+            ``candidate_bound``: an upper bound on the candidate rows —
+            the round's total emitted links, observed in-band on the
+            contacts staging job in both modes. Below the broadcast
+            threshold the guard then costs no count job, and at or
+            below ``probe_min_candidates`` the bloom probe is skipped.
             """
             candidates = seen.filter_new(
                 pre_candidates,
@@ -544,25 +556,13 @@ def run_crawl(
         n_contacts = store.stage_append("contacts", round_contacts, round_no)
         tt = _tlog(f"r{round_no} stage contacts n={n_contacts}", tt)
 
-        if pre is None:
-            # Classic mode: build the next frontier in the MAIN
-            # thread, after contacts staging has materialized the
-            # page/extraction caches — the broadcast-guard count
-            # inside filter_new then reads warm caches. Running it
-            # concurrently with the other staging threads instead
-            # oversubscribes the pandas-UDF workers (measured: 46 s
-            # vs ~3 s for the same round).
-            frontier_df = _build_frontier_next()
-            tt = _tlog(f"r{round_no} frontier plan+guard", tt)
-        else:
-            # Pre-extract mode: the rounds carry no extraction
-            # UDFs, so the frontier build (probe + anti-join +
-            # dedup) can run INSIDE the staging pool, overlapping
-            # the url_seen/bloom writes instead of serializing a
-            # 2-3 s job between them (r4 verdict item #2). The
-            # in-band link-count bound usually removes the guard's
-            # dedicated count job entirely.
-            cand_bound = int(drop_obs.get["nl"])
+        # Contacts staging materialized the round's extraction (the
+        # cached fused stage, or the frontier⋈pre join), so the
+        # frontier build (probe + anti-join + dedup) reads caches only
+        # and runs INSIDE the staging pool, overlapping the
+        # url_seen/bloom writes. The in-band link-count bound usually
+        # removes the guard's count job and the bloom probe entirely.
+        cand_bound = drops.candidate_bound()
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -570,9 +570,7 @@ def run_crawl(
             f_seen = pool.submit(store.stage_append, "url_seen", new_seen, round_no)
             f_frontier = pool.submit(
                 lambda: store.stage_replace(
-                    "frontier",
-                    frontier_df if pre is None else _build_frontier_next(cand_bound),
-                    round_no,
+                    "frontier", _build_frontier_next(cand_bound), round_no
                 )
             )
             f_bloom = (
@@ -632,23 +630,28 @@ def run_crawl(
     # job (url_seen rows are exactly the visited endpoints)
     n_endpoints = store.table_rows("url_seen") or 0
     t_tail = _tlog("tail endpoints", t_tail)
-    summary = {
-        "num_endpoints": n_endpoints,
-        # r6: shrink before the Python stage — substring_index(url,'/',3)
-        # keeps scheme://netloc verbatim (netloc ends at the first '/',
-        # '?' or '#', and neither query nor fragment affects the parsed
-        # hostname), so url_host over the ≤|hosts×schemes| distinct
-        # prefixes equals url_host over every visited URL; the pandas
-        # UDF no longer scans the full url_seen table.
-        "num_subdomains": url_seen.select(
-            F.substring_index(F.col("url"), "/", 3).alias("u")
-        )
+    # r6: shrink before the Python stage — substring_index(url,'/',3)
+    # keeps scheme://netloc verbatim (netloc ends at the first '/', '?'
+    # or '#', and neither query nor fragment affects the parsed
+    # hostname), so url_host over the ≤|hosts×schemes| distinct
+    # prefixes equals url_host over every visited URL; the pandas UDF
+    # never scans the full url_seen table. The host list is small by
+    # construction, so it is collected for the report.
+    subdomains = sorted(
+        r["h"]
+        for r in url_seen.select(F.substring_index(F.col("url"), "/", 3).alias("u"))
         .distinct()
         .select(udfs.url_host(F.col("u")).alias("h"))
         .distinct()
-        .count(),
+        .collect()
+    )
+    summary = {
+        "num_endpoints": n_endpoints,
+        "num_subdomains": len(subdomains),
         "rounds": rounds_run,
     }
     t_tail = _tlog("tail subdomains", t_tail)
     lineage = store.read(spark, "lineage")
-    return CrawlResult(url_seen, deduped, metrics, rounds_run, summary, lineage)
+    return CrawlResult(
+        url_seen, deduped, metrics, rounds_run, summary, lineage, subdomains
+    )

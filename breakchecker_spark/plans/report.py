@@ -4,7 +4,10 @@ The reference shapes a nested dict and writes JSON/CSV/Markdown
 (/root/reference/break_checker.py:1569-1691, results dict 1798-1816).
 Here the heavy aggregation happens in Spark; only the final small
 report rows are collected driver-side (the reference's report is
-small by construction: deduped contacts + hosts + counters).
+small by construction: deduped contacts + hosts + counters). Hosts and
+the endpoint count come from the :class:`~.crawl.CrawlResult` the
+crawl already computed; the report itself only collects the contacts
+and sums the per-round drop counters.
 
 Large-scale variant: pass ``sink_path`` to also write the full contact
 table as parquet/json directly from executors (no driver collect).
@@ -19,14 +22,13 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import udfs
+from .crawl import CrawlResult
 
 
 def build_report(
     domain: str,
-    url_seen: DataFrame,
+    crawl: CrawlResult,
     contacts_with_breaches: DataFrame,
-    metrics: DataFrame,
     scan_start: Optional[str] = None,
     scan_end: Optional[str] = None,
     scan_duration: Optional[float] = None,
@@ -37,9 +39,10 @@ def build_report(
     scan_end/scan_duration keys per break_checker.py:1614-1622,
     timestamps formatted '%Y-%m-%d %H:%M:%S %Z' UTC per bc:1810-1816).
 
-    The summary block counts what is already collected here (hosts,
-    contact rows); only the endpoint count and the dropped counters
-    are separate aggregations."""
+    ``crawl`` supplies the sorted host list and the endpoint count its
+    run already computed; the summary counts the contact rows collected
+    here, and the dropped counters are the one aggregation (over
+    ``crawl.metrics``)."""
     rows = contacts_with_breaches.orderBy("kind", "identifier").collect()
     emails = [
         {
@@ -59,15 +62,9 @@ def build_report(
         for r in rows
         if r["kind"] == "phone"
     ]
-    subdomains = sorted(
-        r["h"]
-        for r in url_seen.select(udfs.url_host(F.col("url")).alias("h"))
-        .distinct()
-        .collect()
-    )
     dropped = {
         r["metric"]: r["v"]
-        for r in metrics.filter(
+        for r in crawl.metrics.filter(
             F.col("metric").isin("emails_dropped", "phones_dropped")
         )
         .groupBy("metric")
@@ -77,8 +74,8 @@ def build_report(
     # key order mirrors the reference's summary dict insertion order
     # (break_checker.py:1613-1622) — CSV/markdown render it as-is
     summary = {
-        "num_subdomains": len(subdomains),
-        "num_endpoints": url_seen.count(),
+        "num_subdomains": len(crawl.subdomains),
+        "num_endpoints": crawl.summary["num_endpoints"],
         "num_emails": len(emails),
         "num_phones": len(phones),
         "num_breached_emails": sum(1 for e in emails if e["breaches"]),
@@ -92,7 +89,7 @@ def build_report(
         "scan_end": scan_end,
         "scan_duration": scan_duration,
         "summary": summary,
-        "subdomains": subdomains,
+        "subdomains": crawl.subdomains,
         "emails": emails,
         "phones": phones,
     }

@@ -358,7 +358,10 @@ def probe_live_hosts(
         )
 
     hosts = hosts.select("host").distinct()
-    https_live = _probe("https", hosts)
+    # evaluated once, here: the http pass's anti-join and the union
+    # both read this checkpoint, so each https root is fetched once and
+    # a flaky host lands in exactly one of the two passes
+    https_live = _probe("https", hosts).localCheckpoint(eager=True)
     rest = hosts.join(https_live.select("host"), "host", "left_anti")
     return https_live.unionByName(_probe("http", rest))
 

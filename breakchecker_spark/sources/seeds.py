@@ -7,8 +7,10 @@ source is a table; the union/filter/apex/liveness logic is identical:
 
 * ``union_seed_sources`` — U1: unionByName + suffix filter + distinct
   + apex row (bc:252-316);
-* ``live_hosts`` — J4: semi-join against hosts present in the pages
-  table, replacing the HTTP liveness probe (bc:376-405);
+* ``host_schemes`` + ``live_hosts`` — J4: the pages table's
+  (host, scheme) liveness table, built once per pages table, and the
+  seeds' join against it, replacing the HTTP liveness probe
+  (bc:376-405);
 * ``validate_domain`` — F1: the driver-side scan precondition
   (bc:177-232), DNS check pinned off for hermeticity.
 """
@@ -74,21 +76,32 @@ def union_seed_sources(
     )
 
 
-def live_hosts(seeds: DataFrame, pages: DataFrame) -> DataFrame:
-    """Replay liveness: hosts with ≥1 page, https preferred (bc:348-405).
+def host_schemes(pages: DataFrame) -> DataFrame:
+    """Replay liveness table: (host, scheme) for every host with ≥1
+    page, https preferred (bc:348-405).
 
     The reference probes https before http; in replay a host is "live
-    https" if any of its page URLs is https, else "live http".
+    https" if any of its page URLs is https, else "live http". One
+    Python pass over every page URL — a caller serving many scans of
+    the same pages table builds (and caches) it once.
     """
-    page_hosts = pages.select(
-        udfs.url_host(F.col("url")).alias("host"),
-        F.when(F.col("url").startswith("https://"), 1).otherwise(0).alias("is_https"),
-    ).groupBy("host").agg(F.max("is_https").alias("any_https"))
     return (
-        seeds.join(page_hosts, "host")
+        pages.select(
+            udfs.url_host(F.col("url")).alias("host"),
+            F.when(F.col("url").startswith("https://"), 1)
+            .otherwise(0)
+            .alias("is_https"),
+        )
+        .groupBy("host")
+        .agg(F.max("is_https").alias("any_https"))
         .select(
             "host",
             F.when(F.col("any_https") == 1, "https").otherwise("http").alias("scheme"),
         )
-        .orderBy("host")
     )
+
+
+def live_hosts(seeds: DataFrame, hosts: DataFrame) -> DataFrame:
+    """Live seeds: the seed hosts found in a :func:`host_schemes`
+    table, with its scheme, sorted by host."""
+    return seeds.select("host").join(hosts, "host").orderBy("host")

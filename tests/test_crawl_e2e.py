@@ -74,8 +74,15 @@ def test_full_crawl_matches_oracle(spark, pages_df, seeds_df, use_bloom, pre_ext
     assert phones == sim.phones
 
 
+def _engine_metrics(result):
+    return sorted(
+        map(tuple, result.metrics.select("round", "metric", "value")
+            .filter(F.col("metric") != "round_millis").collect())
+    )
+
+
 def test_pre_extract_equals_classic_with_budget_and_robots(
-    spark, pages_df, seeds_df, tmp_path
+    spark, pages_df, seeds_df, tmp_path, monkeypatch
 ):
     """Pre-extract mode must be output-identical to the classic loop
     under the adversarial configs too: politeness carry-over rounds
@@ -83,29 +90,72 @@ def test_pre_extract_equals_classic_with_budget_and_robots(
     (incl. the per-round drop counters, which pre-extract aggregates
     via a different mechanism) must also match round for round. The
     classic side runs on the in-memory store and the pre-extract side
-    on the checkpoint store, so the two stores are pinned equal too."""
+    on the checkpoint store, so the two stores are pinned equal too.
+
+    The classic loop also runs on both sides of the probe gate: with
+    the default ``probe_min_candidates`` every round's in-band candidate
+    bound is below it, so each round skips the bloom probe; with 0
+    every round probes."""
+    from breakchecker_spark.operators import seen
+
+    calls = []
+    real_filter_new = seen.filter_new
+
+    def recording_filter_new(*args, **kw):
+        calls.append((kw["candidate_bound"], kw["probe_min_candidates"]))
+        return real_filter_new(*args, **kw)
+
+    monkeypatch.setattr(seen, "filter_new", recording_filter_new)
     robots_rows = [("example.com", "/deep", 1.0)]
     robots_df = spark.createDataFrame(robots_rows, schema=schemas.ROBOTS)
     base = dict(scope_host=fixture_web.SCOPE, max_depth=3, host_budget=1,
                 use_bloom=True, bloom_parts=4, bloom_expected_per_part=1000)
     a = run_crawl(spark, seeds_df, pages_df, CrawlConfig(**base), robots=robots_df)
+    skipped, calls[:] = list(calls), []
+    c = run_crawl(
+        spark, seeds_df, pages_df,
+        CrawlConfig(**base, probe_min_candidates=0), robots=robots_df,
+    )
+    probed, calls[:] = list(calls), []
     b = run_crawl(
         spark, seeds_df, pages_df,
         CrawlConfig(**base, pre_extract=True, checkpoint_dir=str(tmp_path)),
         robots=robots_df,
     )
-    assert _engine_visited(a) == _engine_visited(b)
-    assert _engine_contacts(a) == _engine_contacts(b)
-    ma = sorted(
-        map(tuple, a.metrics.select("round", "metric", "value")
-            .filter(F.col("metric") != "round_millis").collect())
-    )
-    mb = sorted(
-        map(tuple, b.metrics.select("round", "metric", "value")
-            .filter(F.col("metric") != "round_millis").collect())
-    )
-    assert ma == mb
-    assert a.rounds == b.rounds > 4
+    # one frontier build per round, each bounded in-band; the default
+    # gate skips the probe on every one of them, the 0 gate on none
+    assert len(skipped) == a.rounds
+    assert all(0 <= bound <= pmin for bound, pmin in skipped)
+    assert any(bound > 0 for bound, _ in skipped)
+    assert [bound for bound, _ in probed] == [bound for bound, _ in skipped]
+    assert all(pmin == 0 for _, pmin in probed)
+    for other in (b, c):
+        assert _engine_visited(a) == _engine_visited(other)
+        assert _engine_contacts(a) == _engine_contacts(other)
+        assert _engine_metrics(a) == _engine_metrics(other)
+        assert a.rounds == other.rounds
+    assert a.rounds > 4
+
+
+def test_budgeted_crawl_evaluates_seed_plan_once(spark, pages_df):
+    """The seed frontier is materialized once before round 0: the
+    round-0 budget split, its deferred half and the frontier build
+    read that checkpoint instead of re-running the seed plan (in a real
+    scan, the liveness join and the struct-key UDF)."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(host):
+        evaluated.add(1)
+        return host
+
+    tick_udf = F.udf(tick, "string").asNondeterministic()
+    seeds = spark.createDataFrame(fixture_web.SEEDS, schema=schemas.SEEDS)
+    seeds = seeds.withColumn("host", tick_udf("host"))
+    cfg = CrawlConfig(scope_host=fixture_web.SCOPE, max_depth=1, host_budget=1,
+                      use_bloom=False)
+    result = run_crawl(spark, seeds, pages_df, cfg)
+    assert result.rounds > 2  # budget carry-over rounds ran
+    assert evaluated.value == len(fixture_web.SEEDS)
 
 
 def test_depth_gate(spark, pages_df, seeds_df):
@@ -155,7 +205,8 @@ def test_expected_semantic_facts(spark, pages_df, seeds_df):
     }
     assert "shop.example.com" in hosts
     assert not any(h.endswith("outside.org") for h in hosts)
-    # summary's shrunken distinct-host job equals the full per-URL set
+    # the tail's shrunken distinct-host job equals the full per-URL set
+    assert result.subdomains == sorted(hosts)
     assert result.summary["num_subdomains"] == len(hosts)
 
     # struct-key collapse: /contact never visited alongside /contact.html

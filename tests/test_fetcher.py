@@ -376,11 +376,34 @@ def test_cli_live_mode(spark, web, tmp_path, monkeypatch):
         "host string",
     ).write.parquet(seeds_path)
     out = str(tmp_path / "report.json")
+
+    def gone_requests():
+        return {
+            scheme: sum(
+                1 for _, u in srv.requests
+                if (u or "").rstrip("/") == f"{scheme}://gone.example.com"
+            )
+            for scheme in ("https", "http")
+        }
+
+    srv.requests.clear()
     rc = cli.main(
         ["--domain", "example.com", "--live", "--seeds", seeds_path,
          "--depth", "2", "--output", out]
     )
     assert rc == 0
+    in_scan = gone_requests()
+    # each scheme's probe of the unreachable seed ran exactly once: the
+    # scan made as many requests per scheme as one direct fetch of its
+    # roots does (no re-evaluated https pass, no re-run seed plan)
+    srv.requests.clear()
+    roots = spark.createDataFrame(
+        [("https://gone.example.com",), ("http://gone.example.com",)], "url string"
+    )
+    routed_fetch(roots).collect()
+    direct = gone_requests()
+    assert direct["https"] > 0 and direct["http"] > 0
+    assert in_scan == direct
     rep = json.load(open(out))
     emails = {e["email"] for e in rep["emails"]}
     assert "info@example.com" in emails

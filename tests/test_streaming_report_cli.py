@@ -90,9 +90,8 @@ def test_report_roundtrip(spark, crawl_result, tmp_path):
     contacts = breach.match_breaches(crawl_result.contacts, db)
     rep = report.build_report(
         "example.com",
-        crawl_result.url_seen,
+        crawl_result,
         contacts,
-        crawl_result.metrics,
         scan_start="2025-01-01 00:00:00 UTC",
         scan_end="2025-01-01 00:01:00 UTC",
         scan_duration=60.0,
@@ -111,6 +110,7 @@ def test_report_roundtrip(spark, crawl_result, tmp_path):
     assert rep["summary"]["num_breached_emails"] == 1
     assert rep["summary"]["num_breached_phones"] == 1
     assert "blog.example.com" in rep["subdomains"]
+    assert rep["subdomains"] == crawl_result.subdomains
     emails = {e["email"]: e for e in rep["emails"]}
     assert emails["info@example.com"]["breaches"] == ["MegaBreach", "OtherLeak"]
 
@@ -150,7 +150,7 @@ def test_union_seed_sources_and_liveness(spark, pages_path):
     assert hosts == {"example.com", "blog.example.com", "shop.example.com"}
 
     pages = spark.read.parquet(pages_path)
-    live = seeds_mod.live_hosts(merged, pages)
+    live = seeds_mod.live_hosts(merged, seeds_mod.host_schemes(pages))
     schemes = {r["host"]: r["scheme"] for r in live.collect()}
     assert schemes["example.com"] == "https"
     assert schemes["blog.example.com"] == "http"  # only http pages exist
