@@ -122,8 +122,10 @@ def process_pages(
     against the pages table (or live-fetched). Returns:
 
     * link_candidates: (url, host, skey, depth) at depth+1, canonical
-      + deduped per page, host/struct-key precomputed (pure functions
-      of the link url), ready for the seen filter;
+      + deduped within each page but not across pages (the crawl's
+      frontier build dedups by struct key once), host/struct-key
+      precomputed (pure functions of the link url), ready for the seen
+      filter;
     * contacts: (kind, identifier, source_url, depth) normalized, org-
       scoped (emails) / region-validated (phones);
     * drops: exact kept/dropped counts (reference counters
@@ -169,14 +171,10 @@ def process_pages(
         F.coalesce(F.sum("phones_dropped"), F.lit(0)).alias("pd"),
         F.coalesce(F.sum(F.size("links")), F.lit(0)).alias("nl"),
     )
-    link_candidates = (
-        observed.select(
-            F.explode("links").alias("_l"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        .select("_l.url", "_l.host", "_l.skey", "depth")
-        .distinct()
-    )
+    link_candidates = observed.select(
+        F.explode("links").alias("_l"),
+        (F.col("depth") + 1).alias("depth"),
+    ).select("_l.url", "_l.host", "_l.skey", "depth")
     contacts = observed.select(
         "url", "depth", F.explode("contacts").alias("_c")
     ).select(

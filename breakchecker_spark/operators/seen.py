@@ -19,7 +19,10 @@ Scale design (10^10 seen URLs):
 * candidates that miss the bloom are **definitely new** and skip the
   exact check entirely; bloom hits (true-seen + ~1% FP) go through
   it, so results are exactly equal to exact-only
-  (verified by tests/test_seen_bloom.py).
+  (verified by tests/test_seen_bloom.py);
+* the filter is an accelerator, not state the answer depends on: a
+  crawl builds it in the first round with enough candidates to probe
+  it (:func:`probes`) and extends it from then on.
 """
 
 from __future__ import annotations
@@ -58,7 +61,8 @@ def build_bloom(
     """Build the partitioned bloom table from the exact seen table.
 
     One applyInPandas group per partition; each group emits one bitset
-    row. Rebuilt (or incrementally merged) once per crawl round.
+    row. The crawl builds it once, in the first round that probes, and
+    extends it with :func:`bloom_add` from then on.
     """
     nbits, k = bloom.optimal_params(expected_per_part, fp_rate)
 
@@ -167,6 +171,25 @@ def _probe_schema(candidates: DataFrame) -> T.StructType:
     )
 
 
+def probes(
+    candidate_bound: int | None,
+    probe_min_candidates: int,
+    max_broadcast_rows: int | None,
+) -> bool:
+    """Whether :func:`filter_new` runs the bloom probe for candidates
+    bounded by ``candidate_bound`` (None = unbounded). It skips the
+    probe when the bound is at or below ``probe_min_candidates``
+    (0 = never skip) and the bound also keeps the broadcast confirm
+    safe. The crawl asks the same question before building a filter,
+    so no round builds a bloom that its probe would not read."""
+    return not (
+        candidate_bound is not None
+        and probe_min_candidates
+        and candidate_bound <= probe_min_candidates
+        and (max_broadcast_rows is None or candidate_bound <= max_broadcast_rows)
+    )
+
+
 def filter_new(
     candidates: DataFrame,
     seen: DataFrame,
@@ -181,7 +204,14 @@ def filter_new(
 
     ``candidates`` must already carry ``key_hash`` (with_struct_key).
     With a bloom table, definitely-new rows bypass the exact check;
-    results are identical either way (tests/test_seen_bloom.py).
+    results are identical either way (tests/test_seen_bloom.py). Which
+    path runs is decided in this order:
+
+    1. a bound at or below the probe gate (:func:`probes` is False):
+       every candidate takes the broadcast confirm, with or without a
+       bloom table — the crawl builds no filter for such rounds;
+    2. no bloom table: a plain anti-join against the seen side;
+    3. otherwise the bloom probe, then the confirm of its survivors.
 
     Exact-check shape (the 10^10-key path): the seen table is **never
     shuffled**. Bloom survivors (true dups + ~1% FP — bounded small)
@@ -217,19 +247,13 @@ def filter_new(
     bounds the candidates at or below this threshold, the probe is
     skipped and ALL candidates take the exact broadcast-confirm path
     (r6, guide §4.1 — the broadcast of ≤50k keys costs less than the
-    probe stage it replaces). Results are identical either way: the
-    probe only splits candidates into definitely-new vs maybe-seen,
-    and the confirm join is exact for both populations. The seen side
-    is still never shuffled. 0 disables the skip (always probe).
+    probe stage it replaces); a bloom table, if passed, is not read.
+    Results are identical either way: the probe only splits candidates
+    into definitely-new vs maybe-seen, and the confirm join is exact
+    for both populations. The seen side is still never shuffled. 0
+    disables the skip (always probe).
     """
-    if bloom_table is None:
-        return candidates.join(seen.select("key_hash"), "key_hash", "left_anti")
-    if (
-        candidate_bound is not None
-        and probe_min_candidates
-        and candidate_bound <= probe_min_candidates
-        and (max_broadcast_rows is None or candidate_bound <= max_broadcast_rows)
-    ):
+    if not probes(candidate_bound, probe_min_candidates, max_broadcast_rows):
         survivors = candidates
         if cache_registry is not None:
             # the candidate pipeline feeds both the broadcast-confirm
@@ -238,6 +262,8 @@ def filter_new(
             survivors = survivors.cache()
             cache_registry.append(survivors)
         return _confirm_new(survivors, seen)
+    if bloom_table is None:
+        return candidates.join(seen.select("key_hash"), "key_hash", "left_anti")
 
     cand_cols = candidates.columns
     cand = candidates.withColumn(

@@ -35,6 +35,12 @@ from typing import Dict, List, Optional
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
+
+# footer key under which Spark's parquet writer records the exact
+# StructType it wrote (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def partition_stats(path: str) -> Dict[str, tuple]:
@@ -53,6 +59,21 @@ def partition_stats(path: str) -> Dict[str, tuple]:
         files, rows, nbytes = stats.get(part, (0, 0, 0))
         stats[part] = (files + 1, rows + md.num_rows, nbytes + os.path.getsize(f))
     return stats
+
+
+def _footer_schema(path: str) -> T.StructType:
+    """The Spark schema of the parquet version at ``path``, from one
+    data file's footer — no Spark job. Spark-written files carry their
+    exact StructType as JSON in the footer's key-value metadata; the
+    driver-side pyarrow versions (metrics, lineage) map through the
+    Arrow→Spark type mapping Spark's own schema inference agrees
+    with."""
+    f = min(glob.glob(os.path.join(path, "*.parquet")))
+    schema = pq.read_schema(f)
+    spark_json = (schema.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        return T.StructType.fromJson(json.loads(spark_json))
+    return from_arrow_schema(schema)
 
 
 def materialize(df: DataFrame) -> tuple:
@@ -356,13 +377,17 @@ class CheckpointStore:
     def read(self, spark: SparkSession, table: str) -> Optional[DataFrame]:
         """Read a table at its last committed state (None if absent).
 
-        Each version is read separately and unioned by name — the
-        Iceberg-manifest read pattern on plain parquet."""
+        One scan over every live version directory — the
+        Iceberg-manifest read pattern on plain parquet — with the
+        schema taken from one data file's footer on the driver, so
+        read-back runs no Spark job (no per-version schema inference).
+        Columns resolve by name, so the versions' column order need not
+        agree."""
         versions = self._committed_versions(table)
         if not versions:
             return None
-        dfs = [spark.read.parquet(self._dir(table, v)) for v in versions]
-        return reduce(DataFrame.unionByName, dfs)
+        dirs = [self._dir(table, v) for v in versions]
+        return spark.read.schema(_footer_schema(dirs[0])).parquet(*dirs)
 
 
 class MemoryStore:

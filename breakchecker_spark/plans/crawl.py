@@ -23,12 +23,14 @@ rounds. Each round:
    anti-join vs seen and vs queued — bc:1397-1421). The extraction
    observes the round's emitted-link count in-band, in both modes; that
    bound lets small rounds skip the bloom probe and the broadcast
-   guard's count job;
-6. **commit** — frontier / url_seen / contacts / metrics deltas stage
-   and commit atomically through one store interface: on disk with a
-   checkpoint dir (a killed run resumes from the last commit), else in
-   memory. Reading state back from the store also truncates plan
-   lineage, keeping per-round shuffle count flat as depth grows.
+   guard's count job, and no bloom filter exists until the first round
+   whose bound is large enough to probe one;
+6. **commit** — frontier / url_seen / contacts / metrics (and, once it
+   exists, bloom) deltas stage and commit atomically through one store
+   interface: on disk with a checkpoint dir (a killed run resumes from
+   the last commit), else in memory. Reading state back from the store
+   runs no Spark job and truncates plan lineage, keeping per-round
+   shuffle count flat as depth grows.
 
 The seed frontier is materialized once, before round 0, so its row
 count is known up front and no round re-runs the seed plan (liveness,
@@ -45,10 +47,12 @@ from __future__ import annotations
 import os
 import sys
 import time
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..functions import contacts as contacts_fn
 from ..functions import udfs
@@ -60,6 +64,10 @@ _DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
 # metrics deltas are written driver-side with pyarrow (no Spark job);
 # types mirror plans.crawl's metrics schema exactly
 import pyarrow as _pa
+
+# per-round drop counters whose run totals the summary and each
+# commit's manifest carry
+_DROP_METRICS = ("emails_dropped", "phones_dropped")
 
 _METRICS_ARROW = _pa.schema(
     [
@@ -136,6 +144,8 @@ class CrawlResult:
     contacts: DataFrame  # deduped (kind, identifier, source_url, depth)
     metrics: DataFrame  # (run_id, round, metric, value)
     rounds: int
+    # num_endpoints, num_subdomains, rounds and the run's drop totals
+    # (emails_dropped, phones_dropped) — driver-side, no job to read
     summary: dict = field(default_factory=dict)
     # per-partition commit lineage (round, table, version, partition,
     # files, rows, bytes) — None without a checkpoint dir
@@ -175,6 +185,30 @@ def _dedup_frontier(frontier: DataFrame) -> DataFrame:
         "struct_key",
         F.col("b.key_hash").alias("key_hash"),
     )
+
+
+def _fetch_join(keyed: DataFrame, pre: DataFrame, broadcast: bool) -> DataFrame:
+    """A round's frontier rows (keyed by ``_fk``) joined to the
+    pre-extracted page table.
+
+    INNER deliberately: frontier URLs with no page are already in
+    url_seen (marked before the fetch) and a pre-extract row can't
+    exist for them — they contribute no links/contacts/drops either
+    way. ``broadcast`` (the caller knows the frontier's row count is
+    within the broadcast bound) makes the frontier the build side, so
+    the persisted pre table is scanned, never shuffled or hashed, each
+    round. Left to itself the planner sizes the cached frontier by
+    its plan estimate and may hash the whole pre table instead."""
+    return (F.broadcast(keyed) if broadcast else keyed).join(pre, "_fk")
+
+
+def _drop_totals(metrics: DataFrame) -> dict:
+    """The drop counters summed over a metrics table (one job): only
+    for resuming a checkpoint committed before the manifest carried
+    the running totals."""
+    rows = metrics.filter(F.col("metric").isin(*_DROP_METRICS))
+    sums = dict(rows.groupBy("metric").sum("value").collect())
+    return {m: int(sums.get(m, 0)) for m in _DROP_METRICS}
 
 
 def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
@@ -258,21 +292,17 @@ def run_crawl(
                 )
         start_round = manifest["round"] + 1
         frontier_rows = manifest["frontier_rows"]
-        frontier = store.read(spark, "frontier")
-        url_seen = store.read(spark, "url_seen")
-        all_contacts = store.read(spark, "contacts")
-        metrics = store.read(spark, "metrics")
+        frontier, url_seen, all_contacts, metrics = (
+            store.read(spark, t) for t in ("frontier", "url_seen", "contacts", "metrics")
+        )
+        # a checkpoint with no bloom (written with use_bloom=False, or
+        # before any round probed) leaves bloom_table None: the first
+        # probing round then builds the filter from the whole url_seen
         bloom_table = store.read(spark, "bloom") if config.use_bloom else None
-        if config.use_bloom and bloom_table is None and url_seen is not None:
-            # Checkpoint was written with use_bloom=False. The round loop
-            # ORs per-round deltas into the running filter, so a None
-            # start would make round-1's delta-only bloom masquerade as
-            # covering the whole resumed url_seen — bloom-negative rows
-            # would skip the exact anti-join and re-crawl seen URLs.
-            # Rebuild once from the full seen set before entering the loop.
-            bloom_table = seen.build_bloom(
-                url_seen, config.bloom_parts, config.bloom_expected_per_part
-            ).localCheckpoint(eager=True)
+        if all(m in manifest for m in _DROP_METRICS):
+            dropped = {m: manifest[m] for m in _DROP_METRICS}
+        else:  # committed before the manifest carried the totals
+            dropped = _drop_totals(metrics)
     else:
         if manifest is not None:
             # fresh run over a dirty checkpoint dir: drop the old state,
@@ -291,17 +321,16 @@ def run_crawl(
         metrics = spark.createDataFrame(
             [], "run_id string, round int, metric string, value long"
         )
+        dropped = dict.fromkeys(_DROP_METRICS, 0)
 
     host_budgets = None
     if robots is not None and config.round_seconds is not None:
         host_budgets = politeness.crawl_delay_budgets(robots, config.round_seconds)
 
-    pages_slim = (
-        pages.select("url", "html", "text") if pages is not None else None
-    )
+    pages_slim = pages.select("url", "html", "text") if pages is not None else None
     # live-mode dead-host feedback: per-host refused strike counts
     # (reference _DEAD_HOST_FAILS/_DEAD_HOSTS, bc:564-568)
-    _dead_fails: dict = {}
+    _dead_fails: Counter = Counter()
     _dead_set: set = set()
     pre = None
     if config.pre_extract:
@@ -325,26 +354,18 @@ def run_crawl(
         t0 = time.time()
 
         round_caches: list = []
-        # 1. dequeue-time seen re-check — structurally a NO-OP in this
-        # engine, so it is skipped (r6, guide §2.1 "remove the shuffle
-        # outright"). The reference re-checks at dequeue
+        # 1. dequeue-time seen re-check — structurally a NO-OP here, so
+        # it is skipped (r6). The reference re-checks at dequeue
         # (bc:1338-1346) because its async queue can hold entries
-        # enqueued before their key was marked seen; this loop is
-        # level-synchronous and every frontier is built by
-        # _build_frontier_next, which anti-joins candidates against
-        # ``url_seen_next`` — exactly the url_seen the same commit
-        # publishes — and carries politeness-deferred rows whose keys
-        # are disjoint from that round's ``new_seen`` (eligible and
-        # deferred partition the frontier, and only eligible rows are
-        # marked seen). Hence ``frontier ∩ url_seen = ∅`` holds
-        # inductively for every mode (replay / classic / live, with or
-        # without budgets, fresh or resumed — frontier and url_seen
-        # are committed atomically by the same manifest), and the
-        # per-round filter_new probe + broadcast confirm + re-dedup
-        # recomputed an identity. Seeds are deduped at entry
-        # (seeds_to_frontier → _dedup_frontier) and filter_new only
-        # ever removes rows, so the frontier is also struct_key-unique
-        # by construction — no re-dedup needed either. Verified by the
+        # enqueued before their key was marked seen. This loop is
+        # level-synchronous: every frontier is the round's candidates
+        # filtered against ``url_seen_next`` — exactly the url_seen the
+        # same commit publishes — plus politeness-deferred rows, whose
+        # keys are disjoint from the round's ``new_seen`` (only eligible
+        # rows are marked seen). So ``frontier ∩ url_seen = ∅`` holds
+        # inductively in every mode, fresh or resumed, and the frontier
+        # is struct_key-unique by construction (seeds and candidates
+        # are deduped, the filter only removes rows). Verified by the
         # crawl e2e equality matrix and the round-simulating DuckDB
         # oracles (crawl_frontier_bfs / _preextract / _budget).
         live = frontier
@@ -368,6 +389,10 @@ def run_crawl(
         # marks the URL visited and then fails the fetch (bc:1344-1346,
         # 766-768), so dead-host URLs count as endpoints but yield
         # nothing and expand nothing.
+        # 5. extract + expand — classic: one fused extraction stage over
+        # this round's fetched raw pages; pre-extract: a slim join
+        # against the one-pass table (no raw-page scan, no per-round UDF
+        # stage). Neither dedups its links: the frontier build does.
         fetch_input = eligible
         if dead_hosts is not None:
             fetch_input = fetch_input.join(
@@ -385,30 +410,17 @@ def run_crawl(
                     fetch_input.select("url", "host", "depth")
                 ).cache()
                 round_caches.append(fetched_full)
-                for row in (
-                    fetched_full.filter(F.col("error") == "refused")
-                    .groupBy("host")
-                    .count()
-                    .collect()
-                ):
-                    _dead_fails[row["host"]] = (
-                        _dead_fails.get(row["host"], 0) + row["count"]
-                    )
+                refused = fetched_full.filter(F.col("error") == "refused")
+                _dead_fails.update(dict(refused.groupBy("host").count().collect()))
                 newly_dead = sorted(
-                    h
-                    for h, n in _dead_fails.items()
-                    if n >= 2 and h not in _dead_set
+                    h for h, n in _dead_fails.items() if n >= 2 and h not in _dead_set
                 )
                 if newly_dead:
                     _dead_set.update(newly_dead)
-                    nd = spark.createDataFrame(
-                        [(h,) for h in newly_dead], "host string"
-                    )
-                    dead_hosts = (
-                        nd
-                        if dead_hosts is None
-                        else dead_hosts.select("host").unionByName(nd)
-                    )
+                    nd = spark.createDataFrame([(h,) for h in newly_dead], "host string")
+                    if dead_hosts is not None:
+                        nd = dead_hosts.select("host").unionByName(nd)
+                    dead_hosts = nd
                 # error rows keep html/text null — identical to replay
                 # join misses: visited, yield nothing, expand nothing
                 fetched = fetched_full.select("url", "depth", "html", "text")
@@ -416,74 +428,29 @@ def run_crawl(
                 fetched = keyed_input.join(
                     pages_slim.withColumnRenamed("url", "_fk"), "_fk", "left"
                 ).select("url", "depth", "html", "text")
-
-        # incremental bloom: OR a delta filter over only this round's new
-        # keys into the running filter — the full seen table is never
-        # rescanned. Built before candidate filtering so the (much
-        # larger) enqueue-time anti-join is bloom-prefiltered too.
-        bloom_next = None
-        if config.use_bloom:
-            if bloom_table is None:
-                bloom_next = seen.build_bloom(
-                    new_seen, config.bloom_parts, config.bloom_expected_per_part
-                )
-            else:
-                # r6: one cogrouped add stage instead of build-delta +
-                # OR-merge (two chained applyInPandas barriers) — the
-                # resulting bitsets are bit-identical (seen.bloom_add)
-                bloom_next = seen.bloom_add(
-                    bloom_table,
-                    new_seen,
-                    config.bloom_parts,
-                    config.bloom_expected_per_part,
-                )
-            # two consumers (bloom staging write + the enqueue-time
-            # probe cogroup): cache so the applyInPandas OR-merge runs
-            # once — it is a handful of bitset rows
-            bloom_next = bloom_next.cache()
-            round_caches.append(bloom_next)
-
-        # 5. extract + expand — classic: pandas-UDF extraction over this
-        # round's fetched raw pages; pre-extract: a slim join against
-        # the one-pass table (no raw-page scan, no per-round UDF stage)
-        if pre is None:
             link_cands, round_contacts, drops, caches = extract.process_pages(
                 fetched, config.scope_host, config.default_region, config.org_domain
             )
         else:
-            from pyspark.sql import Observation
-
-            # INNER join deliberately: frontier URLs with no page are
-            # already in url_seen (marked before the fetch) and a
-            # pre-extract row can't exist for them — they contribute no
-            # links/contacts/drops either way. Inner keeps the frontier
-            # side broadcastable (AQE picks broadcast from the cached
-            # eligible stats), so the persisted pre table is scanned,
-            # never shuffled, each round — the seen-join property again.
             # "nl" rides along for free (as in process_pages): the
             # total links emitted this round upper-bounds the
             # enqueue-time candidate set
             drop_obs = Observation()
-            joined = keyed_input.join(pre, "_fk").observe(
+            broadcast_frontier = (
+                config.seen_broadcast_max_rows is None
+                or frontier_rows <= config.seen_broadcast_max_rows
+            )
+            joined = _fetch_join(keyed_input, pre, broadcast_frontier).observe(
                 drop_obs,
                 F.coalesce(F.sum("emails_dropped"), F.lit(0)).alias("ed"),
                 F.coalesce(F.sum("phones_dropped"), F.lit(0)).alias("pd"),
                 F.coalesce(F.sum(F.size("links")), F.lit(0)).alias("nl"),
             ).cache()
             round_caches.append(joined)
-            # links carry (url, host, skey) from the one-pass
-            # extraction (pure functions of the link url, so the
-            # distinct set is unchanged) — the per-round candidate
-            # build below is then pure Catalyst: no url_host /
-            # struct_key Python stages inside any round (r6).
-            link_cands = (
-                joined.select(
-                    F.explode("links").alias("_l"),
-                    (F.col("depth") + 1).alias("depth"),
-                )
-                .select("_l.url", "_l.host", "_l.skey", "depth")
-                .distinct()
-            )
+            link_cands = joined.select(
+                F.explode("links").alias("_l"),
+                (F.col("depth") + 1).alias("depth"),
+            ).select("_l.url", "_l.host", "_l.skey", "depth")
             round_contacts = joined.select(
                 "url", "depth", F.explode("contacts").alias("_c")
             ).select(
@@ -494,10 +461,10 @@ def run_crawl(
             )
             drops = extract.PreDrops(drop_obs)
             caches = []
-        # host/skey were computed per link in the extraction stage
-        # (pre-extract pass or the fused per-round classic stage, r6);
-        # only the JVM-side key_hash projection remains per round —
-        # no url_host / struct_key Python stages in either mode
+        # links carry (url, host, skey) computed in the extraction stage
+        # (pure functions of the link url, r6); only the JVM-side
+        # key_hash projection remains per round — no url_host /
+        # struct_key Python stages in either mode
         pre_candidates = (
             link_cands.filter(F.col("depth") <= config.max_depth)
             .withColumnRenamed("skey", "struct_key")
@@ -507,36 +474,10 @@ def run_crawl(
             .select("url", "depth", "host", "struct_key", "key_hash")
         )
 
-        def _build_frontier_next(candidate_bound: int) -> DataFrame:
-            """Enqueue-time checks: not seen, not already queued.
-
-            ``candidate_bound``: an upper bound on the candidate rows —
-            the round's total emitted links, observed in-band on the
-            contacts staging job in both modes. Below the broadcast
-            threshold the guard then costs no count job, and at or
-            below ``probe_min_candidates`` the bloom probe is skipped.
-            """
-            candidates = seen.filter_new(
-                pre_candidates,
-                url_seen_next,
-                bloom_next,
-                config.bloom_parts,
-                cache_registry=round_caches,
-                max_broadcast_rows=config.seen_broadcast_max_rows,
-                candidate_bound=candidate_bound,
-                probe_min_candidates=config.probe_min_candidates,
-            )
-            if config.host_budget is None and host_budgets is None:
-                # no deferrals possible — skip the anti-join and union
-                return _dedup_frontier(candidates.select(*deferred.columns))
-            anti = candidates.join(deferred.select("url"), "url", "left_anti")
-            return _dedup_frontier(
-                deferred.unionByName(anti.select(*deferred.columns))
-            )
-
-        # 6. stage + atomic commit (also truncates lineage via read-back).
-        # Row counts come back from staging (parquet footers on disk,
-        # in-band Observations in memory) — no count jobs.
+        # 6. stage + atomic commit (also truncates lineage via read-back,
+        # which takes its schema from a footer: no job). Row counts come
+        # back from staging (parquet footers on disk, in-band
+        # Observations in memory) — no count jobs.
         tt = _tlog(f"r{round_no} plan", t0)
 
         if config.compact_every and (round_no + 1) % config.compact_every == 0:
@@ -564,14 +505,57 @@ def run_crawl(
         # removes the guard's count job and the bloom probe entirely.
         cand_bound = drops.candidate_bound()
 
-        from concurrent.futures import ThreadPoolExecutor
+        # The bloom exists from the first round that probes it: that
+        # round builds it once from the whole seen set, and every later
+        # round extends it with only its new keys (one cogrouped add
+        # stage, bit-identical to build-delta + OR-merge). Rounds before
+        # it stage no filter — the probe would not read one.
+        bloom_next = None
+        if config.use_bloom and (
+            bloom_table is not None
+            or seen.probes(
+                cand_bound, config.probe_min_candidates, config.seen_broadcast_max_rows
+            )
+        ):
+            sizing = (config.bloom_parts, config.bloom_expected_per_part)
+            bloom_next = (
+                seen.build_bloom(url_seen_next, *sizing)
+                if bloom_table is None
+                else seen.bloom_add(bloom_table, new_seen, *sizing)
+            ).cache()  # read by the staging write and the probe cogroup
+            round_caches.append(bloom_next)
+
+        def _build_frontier_next() -> DataFrame:
+            """Enqueue-time checks: not seen, not already queued.
+
+            The round's candidate bound is the total emitted links,
+            observed in-band on the contacts staging job in both modes.
+            Below the broadcast threshold the guard then costs no count
+            job, and at or below ``probe_min_candidates`` the bloom
+            probe is skipped. With no deferrals possible the candidates
+            are deduped once, before the filter: membership is a
+            function of struct_key, so dedup-then-filter equals
+            filter-then-dedup."""
+            deferrals = config.host_budget is not None or host_budgets is not None
+            new = seen.filter_new(
+                pre_candidates if deferrals else _dedup_frontier(pre_candidates),
+                url_seen_next,
+                bloom_next,
+                config.bloom_parts,
+                cache_registry=round_caches,
+                max_broadcast_rows=config.seen_broadcast_max_rows,
+                candidate_bound=cand_bound,
+                probe_min_candidates=config.probe_min_candidates,
+            ).select(*deferred.columns)
+            if not deferrals:
+                return new
+            anti = new.join(deferred.select("url"), "url", "left_anti")
+            return _dedup_frontier(deferred.unionByName(anti))
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             f_seen = pool.submit(store.stage_append, "url_seen", new_seen, round_no)
             f_frontier = pool.submit(
-                lambda: store.stage_replace(
-                    "frontier", _build_frontier_next(cand_bound), round_no
-                )
+                lambda: store.stage_replace("frontier", _build_frontier_next(), round_no)
             )
             f_bloom = (
                 pool.submit(store.stage_replace, "bloom", bloom_next, round_no)
@@ -588,11 +572,14 @@ def run_crawl(
         )
         # driver-side metric rows; drops.get() blocks until the contacts
         # plan has materialized, which its staging above guaranteed
+        round_drops = drops.get()
+        for m, v in round_drops:
+            dropped[m] += v
         round_metrics = [
             ("frontier_urls", n_eligible),
             ("contacts_extracted", n_contacts),
             ("round_millis", int((time.time() - t0) * 1000)),
-            *drops.get(),
+            *round_drops,
         ]
         store.stage_append_rows(
             "metrics",
@@ -604,14 +591,16 @@ def run_crawl(
             round_no,
         )
         tt = _tlog(f"r{round_no} stage metrics", tt)
+        # running drop totals ride in the manifest, so a resumed run's
+        # summary covers the rounds before the kill without a job
         store.commit(
-            round_no, {"run_id": config.run_id, "frontier_rows": frontier_rows}
+            round_no,
+            {"run_id": config.run_id, "frontier_rows": frontier_rows, **dropped},
         )
         store.gc()  # drop compacted-away / orphan version dirs
-        frontier = store.read(spark, "frontier")
-        url_seen = store.read(spark, "url_seen")
-        all_contacts = store.read(spark, "contacts")
-        metrics = store.read(spark, "metrics")
+        frontier, url_seen, all_contacts, metrics = (
+            store.read(spark, t) for t in ("frontier", "url_seen", "contacts", "metrics")
+        )
         if bloom_next is not None:
             bloom_table = store.read(spark, "bloom")
         eligible.unpersist()
@@ -649,6 +638,7 @@ def run_crawl(
         "num_endpoints": n_endpoints,
         "num_subdomains": len(subdomains),
         "rounds": rounds_run,
+        **dropped,
     }
     t_tail = _tlog("tail subdomains", t_tail)
     lineage = store.read(spark, "lineage")

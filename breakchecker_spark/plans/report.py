@@ -4,10 +4,10 @@ The reference shapes a nested dict and writes JSON/CSV/Markdown
 (/root/reference/break_checker.py:1569-1691, results dict 1798-1816).
 Here the heavy aggregation happens in Spark; only the final small
 report rows are collected driver-side (the reference's report is
-small by construction: deduped contacts + hosts + counters). Hosts and
-the endpoint count come from the :class:`~.crawl.CrawlResult` the
-crawl already computed; the report itself only collects the contacts
-and sums the per-round drop counters.
+small by construction: deduped contacts + hosts + counters). Hosts,
+the endpoint count and the drop totals come from the
+:class:`~.crawl.CrawlResult` the crawl already computed; the report
+itself only collects the contacts.
 
 Large-scale variant: pass ``sink_path`` to also write the full contact
 table as parquet/json directly from executors (no driver collect).
@@ -20,7 +20,7 @@ import io
 import json
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .crawl import CrawlResult
 
@@ -39,10 +39,9 @@ def build_report(
     scan_end/scan_duration keys per break_checker.py:1614-1622,
     timestamps formatted '%Y-%m-%d %H:%M:%S %Z' UTC per bc:1810-1816).
 
-    ``crawl`` supplies the sorted host list and the endpoint count its
-    run already computed; the summary counts the contact rows collected
-    here, and the dropped counters are the one aggregation (over
-    ``crawl.metrics``)."""
+    ``crawl`` supplies the sorted host list, the endpoint count and the
+    drop totals its run already computed; the summary counts the
+    contact rows collected here."""
     rows = contacts_with_breaches.orderBy("kind", "identifier").collect()
     emails = [
         {
@@ -62,15 +61,6 @@ def build_report(
         for r in rows
         if r["kind"] == "phone"
     ]
-    dropped = {
-        r["metric"]: r["v"]
-        for r in crawl.metrics.filter(
-            F.col("metric").isin("emails_dropped", "phones_dropped")
-        )
-        .groupBy("metric")
-        .agg(F.sum("value").alias("v"))
-        .collect()
-    }
     # key order mirrors the reference's summary dict insertion order
     # (break_checker.py:1613-1622) — CSV/markdown render it as-is
     summary = {
@@ -80,8 +70,8 @@ def build_report(
         "num_phones": len(phones),
         "num_breached_emails": sum(1 for e in emails if e["breaches"]),
         "num_breached_phones": sum(1 for p in phones if p["breaches"]),
-        "emails_dropped": int(dropped.get("emails_dropped", 0)),
-        "phones_dropped": int(dropped.get("phones_dropped", 0)),
+        "emails_dropped": crawl.summary["emails_dropped"],
+        "phones_dropped": crawl.summary["phones_dropped"],
     }
     return {
         "scan_domain": domain,

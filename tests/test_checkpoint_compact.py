@@ -151,3 +151,34 @@ def test_crawl_with_frequent_compaction_matches_uninterrupted(spark, tmp_path):
         compacted.metrics.filter(F.col("metric") != "round_millis")
         .select("round", "metric", "value").collect()
     )
+
+
+def test_read_back_runs_no_job_over_every_version(spark, tmp_path):
+    """Read-back is one scan over every live version with the schema
+    taken from a footer: no Spark job until the caller acts on it. The
+    schema equals what parquet inference gives, for a Spark-written
+    append table (several versions, one of them zero-row) and for a
+    driver-side pyarrow table."""
+    root = str(tmp_path / "s_read")
+    store = CheckpointStore(root)
+    schema = "key_hash long, url string, depth int"
+    arrow = pa.schema([("round", pa.int32()), ("metric", pa.string())])
+    for r in range(3):
+        rows = [(r * 10 + i, f"https://h/{r}/{i}", r) for i in range(r)]
+        store.stage_append("t", spark.createDataFrame(rows, schema), r)
+        store.stage_append_rows("m", [{"round": r, "metric": "x"}], arrow, r)
+        store.commit(r)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-back", "read-back")
+    try:
+        t, m = store.read(spark, "t"), store.read(spark, "m")
+        assert not sc.statusTracker().getJobIdsForGroup("read-back")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for table, df in (("t", t), ("m", m)):
+        dirs = glob.glob(os.path.join(root, table, "v*"))
+        assert df.schema == spark.read.parquet(*dirs).schema
+    assert sorted(map(tuple, t.collect())) == [
+        (10, "https://h/1/0", 1), (20, "https://h/2/0", 2), (21, "https://h/2/1", 2)
+    ]
+    assert sorted(r["round"] for r in m.collect()) == [0, 1, 2]

@@ -10,6 +10,9 @@ kill/resume conditions.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -252,11 +255,20 @@ def test_resume_equals_uninterrupted(spark, pages_df, seeds_df, tmp_path):
     # killed after 2 rounds, then resumed
     cfg_kill = CrawlConfig(**base, checkpoint_dir=ckpt, max_rounds=2)
     run_crawl(spark, seeds_df, pages_df, cfg_kill)
+    # a manifest committed before the running drop totals were recorded
+    # in it: resume sums them from the metrics table instead
+    manifest = os.path.join(ckpt, "_manifest.json")
+    with open(manifest) as fh:
+        m = json.load(fh)
+    assert m.pop("emails_dropped") + m.pop("phones_dropped") > 0
+    with open(manifest, "w") as fh:
+        json.dump(m, fh)
     cfg_resume = CrawlConfig(**base, checkpoint_dir=ckpt)
     resumed = run_crawl(spark, seeds_df, pages_df, cfg_resume, resume=True)
 
     assert _engine_visited(resumed) == _engine_visited(full)
     assert _engine_contacts(resumed) == _engine_contacts(full)
+    assert resumed.summary == full.summary
 
 
 def test_resume_without_checkpoint_dir_raises(spark, pages_df, seeds_df):
@@ -289,9 +301,10 @@ def test_pre_extract_resume_equals_uninterrupted(
 
 def test_resume_bloom_on_over_bloomless_checkpoint(spark, pages_df, seeds_df, tmp_path):
     """Resume with use_bloom=True over a checkpoint written with
-    use_bloom=False: the filter must be rebuilt from the full url_seen,
-    or round-1's delta-only bloom would mark resumed-seen URLs as
-    'definitely new' and re-crawl them (ADVICE r1, crawl.py:174)."""
+    use_bloom=False: the filter must be built from the full url_seen,
+    or a delta-only bloom would mark resumed-seen URLs as 'definitely
+    new' and re-crawl them (ADVICE r1). With probe_min_candidates=0 the
+    first resumed round probes, so it builds the filter there."""
     ckpt = str(tmp_path / "ckpt_bloomless")
     base = dict(scope_host=fixture_web.SCOPE, max_depth=3)
 
@@ -303,7 +316,7 @@ def test_resume_bloom_on_over_bloomless_checkpoint(spark, pages_df, seeds_df, tm
     run_crawl(spark, seeds_df, pages_df, cfg_kill)
     cfg_resume = CrawlConfig(
         **base, use_bloom=True, bloom_parts=4, bloom_expected_per_part=1000,
-        checkpoint_dir=ckpt,
+        checkpoint_dir=ckpt, probe_min_candidates=0,
     )
     resumed = run_crawl(spark, seeds_df, pages_df, cfg_resume, resume=True)
 
@@ -312,6 +325,125 @@ def test_resume_bloom_on_over_bloomless_checkpoint(spark, pages_df, seeds_df, tm
     n = resumed.url_seen.count()
     assert n == resumed.url_seen.select("key_hash").distinct().count()
     assert _engine_contacts(resumed) == _engine_contacts(full)
+
+
+def test_lazy_bloom_on_both_sides_of_the_probe_gate(
+    spark, pages_df, seeds_df, tmp_path, monkeypatch
+):
+    """The fixture crawl's per-round candidate bounds are 6, 7, 1, 1;
+    with ``probe_min_candidates=6`` only round 1 probes. Round 0 stages
+    no bloom, round 1 builds it once from the whole url_seen, and
+    rounds 2-3 (below the gate again) extend it with ``bloom_add``, so
+    it covers every visited key. Output equals a ``use_bloom=False``
+    run, and so does a kill/resume on each side of the crossing
+    round."""
+    import numpy as np
+
+    from breakchecker_spark.operators import bloom, seen
+    from breakchecker_spark.plans.checkpoint import CheckpointStore
+
+    built, added, bounds = [], [], []
+    real_build, real_add, real_filter = (
+        seen.build_bloom, seen.bloom_add, seen.filter_new
+    )
+
+    def build(keys, *a, **kw):
+        built.append(keys.count())
+        return real_build(keys, *a, **kw)
+
+    def add(table, keys, *a, **kw):
+        added.append(keys.count())
+        return real_add(table, keys, *a, **kw)
+
+    def filter_new(*a, **kw):
+        bounds.append(kw["candidate_bound"])
+        return real_filter(*a, **kw)
+
+    monkeypatch.setattr(seen, "build_bloom", build)
+    monkeypatch.setattr(seen, "bloom_add", add)
+    monkeypatch.setattr(seen, "filter_new", filter_new)
+    base = dict(scope_host=fixture_web.SCOPE, max_depth=3, bloom_parts=4,
+                bloom_expected_per_part=1000)
+    lazy = dict(base, probe_min_candidates=6)
+
+    def crawl(ckpt=None, resume=False, **kw):
+        cfg = CrawlConfig(**{**lazy, **kw}, checkpoint_dir=ckpt)
+        return run_crawl(spark, seeds_df, pages_df, cfg, resume=resume)
+
+    def same(a, b):
+        assert _engine_visited(a) == _engine_visited(b)
+        assert _engine_contacts(a) == _engine_contacts(b)
+        assert _engine_metrics(a) == _engine_metrics(b)
+        assert a.summary == b.summary
+
+    plain = run_crawl(spark, seeds_df, pages_df, CrawlConfig(**base, use_bloom=False))
+    assert not built and not added
+    bounds.clear()
+
+    ckpt = str(tmp_path / "lazy")
+    full = crawl(ckpt)
+    assert bounds == [6, 7, 1, 1]
+    same(full, plain)
+    per_round = {
+        r["round"]: r["value"]
+        for r in full.metrics.filter(F.col("metric") == "frontier_urls").collect()
+    }
+    # built once, in round 1, from every key seen through round 1
+    assert built == [per_round[0] + per_round[1]]
+    assert added == [per_round[2], per_round[3]]
+    bloom_rounds = {r["round"] for r in full.lineage.collect() if r["table"] == "bloom"}
+    assert bloom_rounds == {1, 2, 3}
+    parts = {
+        r["part_id"]: bloom.BloomPart.from_bytes(r["nbits"], r["k"], r["bits"])
+        for r in CheckpointStore(ckpt).read(spark, "bloom").collect()
+    }
+    for r in full.url_seen.select("key_hash").collect():
+        key = np.array([r["key_hash"]], dtype=np.int64)
+        assert parts[r["key_hash"] % 4].might_contain(key)[0]
+
+    # kill before the crossing round: the resumed run builds the bloom
+    for killed_after, want_built in ((1, 1), (2, 0)):
+        built.clear()
+        added.clear()
+        ckpt = str(tmp_path / f"kill{killed_after}")
+        crawl(ckpt, max_rounds=killed_after)
+        has_bloom = "bloom" in CheckpointStore(ckpt).manifest()["tables"]
+        assert has_bloom == (killed_after == 2)
+        built.clear()
+        resumed = crawl(ckpt, resume=True)
+        same(resumed, full)
+        assert len(built) == want_built
+        assert len(added) == 2
+
+
+def test_fetch_join_builds_on_frontier_side(spark):
+    """The pre-extract round join broadcasts the frontier when the
+    caller knows it is small, even when the planner's size estimate of
+    the frontier (a filtered 2M-row range here) exceeds the persisted
+    pre table's: the pre table is then scanned, not hashed."""
+    import re
+
+    from breakchecker_spark.plans.crawl import _fetch_join
+
+    pre = spark.createDataFrame(
+        [(f"https://h/{i}", i) for i in range(200)], "_fk string, n int"
+    ).persist()
+    pre.count()
+    frontier = spark.range(2_000_000).filter("id < 3").select(
+        F.concat(F.lit("https://h/"), F.col("id").cast("string")).alias("_fk")
+    )
+
+    def build_side(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return re.search(r"BroadcastHashJoin .*?(Build\w+)", plan).group(1)
+
+    try:
+        assert build_side(_fetch_join(frontier, pre, False)) == "BuildRight"
+        joined = _fetch_join(frontier, pre, True)
+        assert build_side(joined) == "BuildLeft"
+        assert sorted(r["n"] for r in joined.collect()) == [0, 1, 2]
+    finally:
+        pre.unpersist()
 
 
 def test_resume_landing_on_compaction_round(

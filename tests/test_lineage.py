@@ -46,6 +46,8 @@ def test_lineage_records_every_commit_per_partition(
             bloom_parts=4,
             bloom_expected_per_part=1000,
             checkpoint_dir=ckpt,
+            # every round probes, so every round stages a bloom
+            probe_min_candidates=0,
         ),
     )
     assert res.lineage is not None
@@ -53,6 +55,7 @@ def test_lineage_records_every_commit_per_partition(
     tables = {r["table"] for r in rows}
     # every checkpointed table appears in lineage
     assert {"url_seen", "contacts", "metrics", "frontier", "bloom"} <= tables
+    assert {r["round"] for r in rows if r["table"] == "bloom"} == set(range(res.rounds))
 
     # url_seen deltas are unpartitioned: their lineage rows carry the
     # empty partition dir, and their row counts sum to the final table
@@ -67,6 +70,32 @@ def test_lineage_records_every_commit_per_partition(
 
     # the committed store audits clean
     assert CheckpointStore(ckpt).verify_integrity() == []
+
+
+def test_default_gate_stages_no_bloom(spark, seeds_df, pages_df, tmp_path):
+    """Under the default probe gate no round of the small fixture crawl
+    probes, so none builds a bloom: lineage has no bloom row and the
+    store has no bloom table."""
+    ckpt = str(tmp_path / "ckpt_nobloom")
+    res = run_crawl(
+        spark,
+        seeds_df,
+        pages_df,
+        CrawlConfig(
+            scope_host=fixture_web.SCOPE,
+            max_depth=3,
+            bloom_parts=4,
+            bloom_expected_per_part=1000,
+            checkpoint_dir=ckpt,
+        ),
+    )
+    tables = {r["table"] for r in res.lineage.collect()}
+    assert {"url_seen", "contacts", "metrics", "frontier"} <= tables
+    assert "bloom" not in tables
+    store = CheckpointStore(ckpt)
+    assert "bloom" not in store.manifest()["tables"]
+    assert store.read(spark, "bloom") is None
+    assert store.verify_integrity() == []
 
 
 def test_resume_appends_lineage_and_verify_gate(spark, seeds_df, pages_df, tmp_path):

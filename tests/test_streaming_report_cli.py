@@ -111,6 +111,17 @@ def test_report_roundtrip(spark, crawl_result, tmp_path):
     assert rep["summary"]["num_breached_phones"] == 1
     assert "blog.example.com" in rep["subdomains"]
     assert rep["subdomains"] == crawl_result.subdomains
+    # drop counters come from the run's driver-side totals and equal
+    # the metrics table's per-round sums
+    sums = {
+        r["metric"]: r["v"]
+        for r in crawl_result.metrics.groupBy("metric")
+        .agg(F.sum("value").alias("v"))
+        .collect()
+    }
+    for m in ("emails_dropped", "phones_dropped"):
+        assert rep["summary"][m] == sums[m] == crawl_result.summary[m]
+    assert rep["summary"]["emails_dropped"] + rep["summary"]["phones_dropped"] > 0
     emails = {e["email"]: e for e in rep["emails"]}
     assert emails["info@example.com"]["breaches"] == ["MegaBreach", "OtherLeak"]
 
