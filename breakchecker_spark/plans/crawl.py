@@ -47,12 +47,10 @@ from __future__ import annotations
 import os
 import sys
 import time
-from collections import Counter
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import contacts as contacts_fn
 from ..functions import udfs
@@ -65,8 +63,7 @@ _DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
 # types mirror plans.crawl's metrics schema exactly
 import pyarrow as _pa
 
-# per-round drop counters whose run totals the summary and each
-# commit's manifest carry
+# per-round drop counters whose run totals the summary carries
 _DROP_METRICS = ("emails_dropped", "phones_dropped")
 
 _METRICS_ARROW = _pa.schema(
@@ -105,7 +102,8 @@ class CrawlConfig:
     # skip the bloom-probe cogroup stage when the round's candidate
     # bound (its emitted-link count, observed in-band in both modes) is
     # at or below this (seen.filter_new probe_min_candidates);
-    # 0 = always probe
+    # 0 = always probe. A pre-extract round whose frontier is at or
+    # below it also broadcasts the frontier into its fetch join.
     probe_min_candidates: int = 50_000
     # compact append tables (url_seen/contacts/metrics) every this many
     # rounds once they hold that many delta versions — the Iceberg
@@ -187,28 +185,21 @@ def _dedup_frontier(frontier: DataFrame) -> DataFrame:
     )
 
 
-def _fetch_join(keyed: DataFrame, pre: DataFrame, broadcast: bool) -> DataFrame:
-    """A round's frontier rows (keyed by ``_fk``) joined to the
-    pre-extracted page table.
-
-    INNER deliberately: frontier URLs with no page are already in
-    url_seen (marked before the fetch) and a pre-extract row can't
-    exist for them — they contribute no links/contacts/drops either
-    way. ``broadcast`` (the caller knows the frontier's row count is
-    within the broadcast bound) makes the frontier the build side, so
-    the persisted pre table is scanned, never shuffled or hashed, each
-    round. Left to itself the planner sizes the cached frontier by
-    its plan estimate and may hash the whole pre table instead."""
-    return (F.broadcast(keyed) if broadcast else keyed).join(pre, "_fk")
-
-
-def _drop_totals(metrics: DataFrame) -> dict:
-    """The drop counters summed over a metrics table (one job): only
-    for resuming a checkpoint committed before the manifest carried
-    the running totals."""
-    rows = metrics.filter(F.col("metric").isin(*_DROP_METRICS))
-    sums = dict(rows.groupBy("metric").sum("value").collect())
-    return {m: int(sums.get(m, 0)) for m in _DROP_METRICS}
+def _fetch_join(
+    keyed: DataFrame, pre: DataFrame, frontier_rows: int, broadcast_max_rows: int
+) -> DataFrame:
+    """A round's frontier (``_fk``, ``url``, ``depth``) joined to the
+    pre-extracted page table. INNER deliberately: frontier URLs with
+    no page are already in url_seen (marked before the fetch) and
+    yield no links/contacts/drops either way. A frontier of at most
+    ``broadcast_max_rows`` rows is broadcast, so the persisted pre
+    table is scanned, not hashed (the planner, sizing the frontier by
+    its plan estimate, may hash the pre table instead); above the
+    bound the planner chooses."""
+    side = keyed.select("_fk", "url", "depth")
+    if frontier_rows <= broadcast_max_rows:
+        side = F.broadcast(side)
+    return side.join(pre, "_fk")
 
 
 def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
@@ -292,17 +283,18 @@ def run_crawl(
                 )
         start_round = manifest["round"] + 1
         frontier_rows = manifest["frontier_rows"]
-        frontier, url_seen, all_contacts, metrics = (
-            store.read(spark, t) for t in ("frontier", "url_seen", "contacts", "metrics")
-        )
+        frontier = store.read(spark, "frontier")
+        url_seen = store.read(spark, "url_seen")
+        all_contacts = store.read(spark, "contacts")
+        metrics = store.read(spark, "metrics")
         # a checkpoint with no bloom (written with use_bloom=False, or
         # before any round probed) leaves bloom_table None: the first
         # probing round then builds the filter from the whole url_seen
         bloom_table = store.read(spark, "bloom") if config.use_bloom else None
-        if all(m in manifest for m in _DROP_METRICS):
-            dropped = {m: manifest[m] for m in _DROP_METRICS}
-        else:  # committed before the manifest carried the totals
-            dropped = _drop_totals(metrics)
+        # drop totals of the rounds before the kill (one job)
+        rows = metrics.filter(F.col("metric").isin(*_DROP_METRICS))
+        sums = dict(rows.groupBy("metric").sum("value").collect())
+        dropped = {m: int(sums.get(m, 0)) for m in _DROP_METRICS}
     else:
         if manifest is not None:
             # fresh run over a dirty checkpoint dir: drop the old state,
@@ -327,10 +319,12 @@ def run_crawl(
     if robots is not None and config.round_seconds is not None:
         host_budgets = politeness.crawl_delay_budgets(robots, config.round_seconds)
 
-    pages_slim = pages.select("url", "html", "text") if pages is not None else None
+    pages_slim = (
+        pages.select("url", "html", "text") if pages is not None else None
+    )
     # live-mode dead-host feedback: per-host refused strike counts
     # (reference _DEAD_HOST_FAILS/_DEAD_HOSTS, bc:564-568)
-    _dead_fails: Counter = Counter()
+    _dead_fails: dict = {}
     _dead_set: set = set()
     pre = None
     if config.pre_extract:
@@ -354,18 +348,26 @@ def run_crawl(
         t0 = time.time()
 
         round_caches: list = []
-        # 1. dequeue-time seen re-check — structurally a NO-OP here, so
-        # it is skipped (r6). The reference re-checks at dequeue
+        # 1. dequeue-time seen re-check — structurally a NO-OP in this
+        # engine, so it is skipped (r6, guide §2.1 "remove the shuffle
+        # outright"). The reference re-checks at dequeue
         # (bc:1338-1346) because its async queue can hold entries
-        # enqueued before their key was marked seen. This loop is
-        # level-synchronous: every frontier is the round's candidates
-        # filtered against ``url_seen_next`` — exactly the url_seen the
-        # same commit publishes — plus politeness-deferred rows, whose
-        # keys are disjoint from the round's ``new_seen`` (only eligible
-        # rows are marked seen). So ``frontier ∩ url_seen = ∅`` holds
-        # inductively in every mode, fresh or resumed, and the frontier
-        # is struct_key-unique by construction (seeds and candidates
-        # are deduped, the filter only removes rows). Verified by the
+        # enqueued before their key was marked seen; this loop is
+        # level-synchronous and every frontier is built by
+        # _build_frontier_next, which anti-joins candidates against
+        # ``url_seen_next`` — exactly the url_seen the same commit
+        # publishes — and carries politeness-deferred rows whose keys
+        # are disjoint from that round's ``new_seen`` (eligible and
+        # deferred partition the frontier, and only eligible rows are
+        # marked seen). Hence ``frontier ∩ url_seen = ∅`` holds
+        # inductively for every mode (replay / classic / live, with or
+        # without budgets, fresh or resumed — frontier and url_seen
+        # are committed atomically by the same manifest), and the
+        # per-round filter_new probe + broadcast confirm + re-dedup
+        # recomputed an identity. Seeds are deduped at entry
+        # (seeds_to_frontier → _dedup_frontier) and filter_new only
+        # ever removes rows, so the frontier is also struct_key-unique
+        # by construction — no re-dedup needed either. Verified by the
         # crawl e2e equality matrix and the round-simulating DuckDB
         # oracles (crawl_frontier_bfs / _preextract / _budget).
         live = frontier
@@ -410,17 +412,30 @@ def run_crawl(
                     fetch_input.select("url", "host", "depth")
                 ).cache()
                 round_caches.append(fetched_full)
-                refused = fetched_full.filter(F.col("error") == "refused")
-                _dead_fails.update(dict(refused.groupBy("host").count().collect()))
+                for row in (
+                    fetched_full.filter(F.col("error") == "refused")
+                    .groupBy("host")
+                    .count()
+                    .collect()
+                ):
+                    _dead_fails[row["host"]] = (
+                        _dead_fails.get(row["host"], 0) + row["count"]
+                    )
                 newly_dead = sorted(
-                    h for h, n in _dead_fails.items() if n >= 2 and h not in _dead_set
+                    h
+                    for h, n in _dead_fails.items()
+                    if n >= 2 and h not in _dead_set
                 )
                 if newly_dead:
                     _dead_set.update(newly_dead)
-                    nd = spark.createDataFrame([(h,) for h in newly_dead], "host string")
-                    if dead_hosts is not None:
-                        nd = dead_hosts.select("host").unionByName(nd)
-                    dead_hosts = nd
+                    nd = spark.createDataFrame(
+                        [(h,) for h in newly_dead], "host string"
+                    )
+                    dead_hosts = (
+                        nd
+                        if dead_hosts is None
+                        else dead_hosts.select("host").unionByName(nd)
+                    )
                 # error rows keep html/text null — identical to replay
                 # join misses: visited, yield nothing, expand nothing
                 fetched = fetched_full.select("url", "depth", "html", "text")
@@ -432,15 +447,16 @@ def run_crawl(
                 fetched, config.scope_host, config.default_region, config.org_domain
             )
         else:
+            from pyspark.sql import Observation
+
             # "nl" rides along for free (as in process_pages): the
             # total links emitted this round upper-bounds the
             # enqueue-time candidate set
             drop_obs = Observation()
-            broadcast_frontier = (
-                config.seen_broadcast_max_rows is None
-                or frontier_rows <= config.seen_broadcast_max_rows
-            )
-            joined = _fetch_join(keyed_input, pre, broadcast_frontier).observe(
+            # a frontier within the small-round gate is broadcast
+            joined = _fetch_join(
+                keyed_input, pre, frontier_rows, config.probe_min_candidates
+            ).observe(
                 drop_obs,
                 F.coalesce(F.sum("emails_dropped"), F.lit(0)).alias("ed"),
                 F.coalesce(F.sum("phones_dropped"), F.lit(0)).alias("pd"),
@@ -505,11 +521,9 @@ def run_crawl(
         # removes the guard's count job and the bloom probe entirely.
         cand_bound = drops.candidate_bound()
 
-        # The bloom exists from the first round that probes it: that
-        # round builds it once from the whole seen set, and every later
-        # round extends it with only its new keys (one cogrouped add
-        # stage, bit-identical to build-delta + OR-merge). Rounds before
-        # it stage no filter — the probe would not read one.
+        # The bloom exists from the first round that probes: that round
+        # builds it from the whole seen set, later rounds add only their
+        # new keys (seen.bloom_add). Earlier rounds stage no filter.
         bloom_next = None
         if config.use_bloom and (
             bloom_table is not None
@@ -526,16 +540,10 @@ def run_crawl(
             round_caches.append(bloom_next)
 
         def _build_frontier_next() -> DataFrame:
-            """Enqueue-time checks: not seen, not already queued.
-
-            The round's candidate bound is the total emitted links,
-            observed in-band on the contacts staging job in both modes.
-            Below the broadcast threshold the guard then costs no count
-            job, and at or below ``probe_min_candidates`` the bloom
-            probe is skipped. With no deferrals possible the candidates
-            are deduped once, before the filter: membership is a
-            function of struct_key, so dedup-then-filter equals
-            filter-then-dedup."""
+            """Enqueue-time checks: not seen, not already queued. With
+            no deferrals possible the candidates are deduped once,
+            before the filter: membership is a function of struct_key,
+            so dedup-then-filter equals filter-then-dedup."""
             deferrals = config.host_budget is not None or host_budgets is not None
             new = seen.filter_new(
                 pre_candidates if deferrals else _dedup_frontier(pre_candidates),
@@ -551,6 +559,8 @@ def run_crawl(
                 return new
             anti = new.join(deferred.select("url"), "url", "left_anti")
             return _dedup_frontier(deferred.unionByName(anti))
+
+        from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             f_seen = pool.submit(store.stage_append, "url_seen", new_seen, round_no)
@@ -591,16 +601,14 @@ def run_crawl(
             round_no,
         )
         tt = _tlog(f"r{round_no} stage metrics", tt)
-        # running drop totals ride in the manifest, so a resumed run's
-        # summary covers the rounds before the kill without a job
         store.commit(
-            round_no,
-            {"run_id": config.run_id, "frontier_rows": frontier_rows, **dropped},
+            round_no, {"run_id": config.run_id, "frontier_rows": frontier_rows}
         )
         store.gc()  # drop compacted-away / orphan version dirs
-        frontier, url_seen, all_contacts, metrics = (
-            store.read(spark, t) for t in ("frontier", "url_seen", "contacts", "metrics")
-        )
+        frontier = store.read(spark, "frontier")
+        url_seen = store.read(spark, "url_seen")
+        all_contacts = store.read(spark, "contacts")
+        metrics = store.read(spark, "metrics")
         if bloom_next is not None:
             bloom_table = store.read(spark, "bloom")
         eligible.unpersist()
