@@ -56,8 +56,13 @@ EMAIL_PATTERN = (
 )
 EMAIL_RE = re.compile(EMAIL_PATTERN)
 
-# Tolerant digit-run matcher (reference break_checker.py:991).
-PHONE_PATTERN = r"\+?\d[\d\s()\-]{6,}\d"
+# Tolerant digit-run matcher (reference break_checker.py:991:
+# ``\+?\d[\d\s()\-]{6,}\d``). The leading ``\+?\d`` is spelled as an
+# alternation with the same try order ('+' then digit first, else a
+# digit), so the matches are the same; a pattern that starts with a
+# required character lets the regex engine skip ahead to candidate
+# positions instead of trying every one.
+PHONE_PATTERN = r"(?:\+\d|\d)[\d\s()\-]{6,}\d"
 PHONE_RE = re.compile(PHONE_PATTERN)
 
 # ------------------------------------------------------- region guessing
@@ -511,6 +516,8 @@ def tel_numbers(href: str) -> List[str]:
 
 def extract_emails(text: str) -> List[str]:
     """All raw email candidates in normalized text (order of appearance)."""
+    if "@" not in text:  # every match contains one
+        return []
     return EMAIL_RE.findall(text)
 
 

@@ -12,10 +12,24 @@ bodies) with a single separator; :func:`page_text` reproduces that:
 each contiguous character-data run becomes one node, joined by " ".
 Entity references are decoded (convert_charrefs), matching bs4's
 ``html.parser`` tree builder.
+
+:func:`harvest` has two paths. With text (``page_text``, anchor text
+for ``operators/webgraph``, ``oracle.simulate_crawl``) it is a full
+``HTMLParser`` pass (:class:`_Harvester`). Without text, the crawl's
+extraction kernel, it is the links-only scan (:class:`_LinkScanner`),
+which yields the same hrefs and script srcs at a fraction of the cost.
+It replays this interpreter's ``html.parser`` dispatch, so
+tests/test_kernel_diff.py pins it to the full pass (hypothesis over
+comments, marked sections, unterminated constructs, script/style
+bodies, quoted ``>``), and that test is what would flag a Python
+upgrade that changes ``html.parser``.
 """
 
 from __future__ import annotations
 
+import re
+import string
+from html import parser as _parser
 from html.parser import HTMLParser
 from typing import List, Optional, Tuple
 
@@ -66,12 +80,106 @@ class _Harvester(HTMLParser):
                 self._open_anchor[1].append(data)
 
 
+_ASCII_LETTERS = frozenset(string.ascii_letters)
+# A start tag's name begins with an ASCII letter, so only one that
+# begins a/s (either case) can lower-case to a, script or style.
+_MAYBE_EVENT_TAG = frozenset("aAsS")
+_EVENT_TAGS = ("a", "script", "style")
+# Runs of markup that raise no event and leave CDATA mode off, skipped
+# in one C-level match: character data, end tags (outside CDATA mode
+# HTMLParser ends one at the first '>' after '</'), and start tags not
+# starting a/s whose text up to the first '>' has no '<' or quote.
+# HTMLParser resumes after such a start tag somewhere in (its '<', that
+# '>' + 1] (an attribute value cannot run past the '>' without a quote)
+# and finds the next construct at the next '<', which lies after the
+# '>', so resuming just after the '>' finds the same one.
+_SKIP = re.compile(r"(?:[^<]+|</[^>]*>|<[b-rt-zB-RT-Z][^<>\"']*>)*")
+
+
+class _LinkScanner(_Harvester):
+    """Links-only scan: the ``a``/``script`` start-tag events that
+    :class:`_Harvester` sees under ``feed`` + ``close``, without
+    tokenizing what cannot produce one.
+
+    It walks the markup constructs in ``HTMLParser.goahead``'s order,
+    with ``close()``'s end-of-input recovery for unterminated ones
+    (``feed`` + ``close`` reaches the same events as one pass with
+    ``end`` set).  Runs that cannot raise an event are skipped by one
+    :data:`_SKIP` match.  Other constructs are delimited by the
+    stdlib's own ``parse_comment`` / ``parse_pi`` /
+    ``parse_html_declaration`` / ``check_for_whole_start_tag``; ``a``,
+    ``script`` and ``style`` start tags go through ``parse_starttag``
+    (which fires the event and enters CDATA mode) and CDATA mode ends
+    in ``parse_endtag``.  What it leaves out is attribute parsing for
+    other tags, character data and its entity decoding, and line
+    counting.
+    """
+
+    def __init__(self) -> None:
+        super().__init__(collect_text=False)
+
+    def scan(self, doc: str) -> None:
+        self.rawdata = doc  # read by the inherited parse_* methods
+        n = len(doc)
+        find = doc.find
+        i = 0
+        while i < n:
+            if self.cdata_elem:
+                m = self.interesting.search(doc, i)
+                if m is None:
+                    return  # unterminated <script>/<style>: no more tags
+                i = m.start()
+                k = self.parse_endtag(i)
+            else:
+                i = _SKIP.match(doc, i).end()
+                if i == n:
+                    return
+                c = doc[i + 1 : i + 2]
+                if c in _ASCII_LETTERS:
+                    if (
+                        c in _MAYBE_EVENT_TAG
+                        and _parser.tagfind_tolerant.match(doc, i + 1).group(1).lower()
+                        in _EVENT_TAGS
+                    ):
+                        k = self.parse_starttag(i)
+                    else:
+                        k = self.check_for_whole_start_tag(i)
+                elif c == "/":
+                    k = -1  # _SKIP takes every end tag that has a '>'
+                elif doc.startswith("<!--", i):
+                    k = self.parse_comment(i)
+                elif c == "?":
+                    k = self.parse_pi(i)
+                elif c == "!":
+                    k = self.parse_html_declaration(i)
+                elif i + 1 < n:
+                    k = i + 1
+                else:
+                    return
+            if k < 0:  # unterminated construct: close()'s recovery
+                k = find(">", i + 1)
+                if k < 0:
+                    k = find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+            i = k
+
+
 def harvest(html_doc: str, collect_text: bool = True) -> _Harvester:
-    """Parse once; return the populated harvester (errors swallowed)."""
-    h = _Harvester(collect_text=collect_text)
+    """Parse once; return the populated harvester (errors swallowed).
+
+    ``collect_text=False`` (hrefs and script srcs only) takes the
+    links-only scan; everything else is a full ``HTMLParser`` pass.
+    """
+    h = _Harvester(collect_text=True) if collect_text else _LinkScanner()
     try:
-        h.feed(html_doc)
-        h.close()
+        if collect_text:
+            h.feed(html_doc)
+            h.close()
+        else:
+            h.scan(html_doc)
     except Exception:
         pass
     return h

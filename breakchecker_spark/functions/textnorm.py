@@ -56,19 +56,24 @@ def norm_text(s: str) -> str:
     Control/format characters are removed except ``\\n \\r \\t``; this is
     the normal form every extraction regex runs over, and the definition
     of "extracted text" for the byte-identical-per-url invariant
-    (reference break_checker.py:1066-1086). ASCII text (and the ASCII
+    (reference break_checker.py:1066-1086). Text with nothing to drop
+    skips the removal passes; otherwise ASCII text (and the ASCII
     segments of mixed text) takes a translate-table fast path with
-    identical output; only non-ASCII runs pay the per-char check.
+    identical output, and only non-ASCII runs pay the per-char check.
     """
     if "&" in s:  # html.unescape is identity otherwise
         s = _html.unescape(s)
     if "\\u" in s or "\\x" in s:  # escape regexes can't match otherwise
         s = decode_escapes(s)
-    if s.isascii():
-        return _ASCII_C_RE.sub("", s)
-    s = unicodedata.normalize("NFKC", s)
+    ascii_ = s.isascii()
+    if not ascii_:
+        s = unicodedata.normalize("NFKC", s)
+    # isprintable() is False for every category-C character (and every
+    # separator but the ASCII space): True means nothing to drop
+    if s.replace("\n", "").replace("\r", "").replace("\t", "").isprintable():
+        return s
     s = _ASCII_C_RE.sub("", s)
-    return _NON_ASCII_RUN.sub(_drop_c_in_run, s)
+    return s if ascii_ else _NON_ASCII_RUN.sub(_drop_c_in_run, s)
 
 
 def strip_edge_punct(s: str) -> str:

@@ -2,8 +2,8 @@
 
 Every UDF here is batch-vectorized (Series in, Series out — never
 row-at-a-time Python registered UDFs), per the pipeline contract
-("no per-row Python"). The hot path parses each page exactly once
-(:func:`harvest_page`) and returns all derived columns in one struct.
+("no per-row Python"). Page extraction itself is not here: it is one
+``mapInPandas`` stage (``operators/extract._fused_preextract_fn``).
 
 Spark-native expressions are preferred wherever they are byte-exact
 (e.g. the email regex runs through ``regexp_extract_all`` — Java regex
@@ -14,196 +14,15 @@ validation) that SQL expressions cannot reproduce.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import contacts, htmlx, textnorm, urlnorm
-
-# ------------------------------------------------------------- schemas
-
-HARVEST_SCHEMA = T.StructType(
-    [
-        T.StructField("hrefs", T.ArrayType(T.StringType())),
-        T.StructField("script_srcs", T.ArrayType(T.StringType())),
-        T.StructField("text", T.StringType()),
-        T.StructField("mailto_raw", T.ArrayType(T.StringType())),
-        T.StructField("tel_raw", T.ArrayType(T.StringType())),
-    ]
-)
-
-CANDIDATES_SCHEMA = T.StructType(
-    [
-        T.StructField("emails", T.ArrayType(T.StringType())),
-        T.StructField("phones", T.ArrayType(T.StringType())),
-    ]
-)
-
-# ------------------------------------------------------------ page pass
-
-
-@F.pandas_udf(HARVEST_SCHEMA)
-def harvest_page(html_bytes: pd.Series) -> pd.DataFrame:
-    """One-shot page parse: hrefs, script srcs, visible text, mailto/tel.
-
-    Input may be binary (the pages table's ``html`` column) or string;
-    bytes decode as UTF-8 with replacement. Equivalent to the
-    reference's per-page BeautifulSoup pass (break_checker.py:1379-1421)
-    but amortized over Arrow batches.
-    """
-    hrefs, srcs, texts, mailtos, tels = [], [], [], [], []
-    for doc in html_bytes:
-        if doc is None:
-            hrefs.append([]); srcs.append([]); texts.append("")
-            mailtos.append([]); tels.append([])
-            continue
-        if isinstance(doc, (bytes, bytearray)):
-            doc = bytes(doc).decode("utf-8", errors="replace")
-        # text nodes are not collected: the pages table's `text` column
-        # is authoritative for visible text (input_hint invariant)
-        h = htmlx.harvest(doc, collect_text=False)
-        hrefs.append(h.hrefs)
-        srcs.append(h.script_srcs)
-        texts.append("")
-        page_mailtos: List[str] = []
-        page_tels: List[str] = []
-        for href in h.hrefs:
-            low = href.strip().lower()
-            if low.startswith("mailto:"):
-                page_mailtos.extend(contacts.mailto_addresses(href))
-            elif low.startswith("tel:"):
-                page_tels.extend(contacts.tel_numbers(href))
-        mailtos.append(page_mailtos)
-        tels.append(page_tels)
-    return pd.DataFrame(
-        {
-            "hrefs": hrefs,
-            "script_srcs": srcs,
-            "text": texts,
-            "mailto_raw": mailtos,
-            "tel_raw": tels,
-        }
-    )
-
-
-@F.pandas_udf(CANDIDATES_SCHEMA)
-def extract_candidates(text: pd.Series) -> pd.DataFrame:
-    """norm_text → email/phone regex sweep, vectorized per batch.
-
-    Reference extract_data (break_checker.py:1423-1444) without the
-    add_* side effects — normalization/filtering happens downstream so
-    kept/dropped metrics stay exact DataFrame counts.
-    """
-    emails, phones = [], []
-    for t in text:
-        if not t:
-            emails.append([]); phones.append([])
-            continue
-        normed = textnorm.norm_text(t)
-        emails.append(contacts.extract_emails(normed))
-        phones.append(contacts.extract_phones(normed))
-    return pd.DataFrame({"emails": emails, "phones": phones})
-
-
-PAGE_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("hrefs", T.ArrayType(T.StringType())),
-        T.StructField("script_srcs", T.ArrayType(T.StringType())),
-        T.StructField("emails_raw", T.ArrayType(T.StringType())),
-        T.StructField("phones_raw", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-@F.pandas_udf(PAGE_FEATURES_SCHEMA)
-def page_features(raw: pd.Series, text: pd.Series, is_js: pd.Series) -> pd.DataFrame:
-    """Fused per-page pass: harvest + raw-sweep + text-sweep in ONE
-    Arrow round trip.
-
-    Semantically identical to the harvest_page/extract_candidates
-    composition in operators/extract.py:_enrich (same gating: no
-    harvest and no phones for .js URLs; no text sweep when text is
-    null), but the big raw string crosses the JVM↔Python Arrow
-    boundary once instead of twice and one python runner replaces
-    three chained ones — the extraction pass is the crawl's dominant
-    cost at replay scale, so the transfer matters.
-    """
-    hrefs, srcs, emails_out, phones_out = [], [], [], []
-    for doc, txt, js in zip(raw, text, is_js):
-        if doc is None:
-            doc = ""
-        page_hrefs: List[str] = []
-        page_srcs: List[str] = []
-        mailtos: List[str] = []
-        tels: List[str] = []
-        if not js and doc:
-            h = htmlx.harvest(doc, collect_text=False)
-            page_hrefs, page_srcs = h.hrefs, h.script_srcs
-            for href in h.hrefs:
-                low = href.strip().lower()
-                if low.startswith("mailto:"):
-                    mailtos.extend(contacts.mailto_addresses(href))
-                elif low.startswith("tel:"):
-                    tels.extend(contacts.tel_numbers(href))
-        if doc:
-            normed = textnorm.norm_text(doc)
-            e1 = contacts.extract_emails(normed)
-            p1 = contacts.extract_phones(normed)
-        else:
-            e1, p1 = [], []
-        if not js and txt:
-            normed_t = textnorm.norm_text(txt)
-            e2 = contacts.extract_emails(normed_t)
-            p2 = contacts.extract_phones(normed_t)
-        else:
-            e2, p2 = [], []
-        hrefs.append(page_hrefs)
-        srcs.append(page_srcs)
-        emails_out.append(e1 + e2 + mailtos)
-        phones_out.append([] if js else p1 + p2 + tels)
-    return pd.DataFrame(
-        {
-            "hrefs": hrefs,
-            "script_srcs": srcs,
-            "emails_raw": emails_out,
-            "phones_raw": phones_out,
-        }
-    )
-
+from . import contacts, textnorm, urlnorm
 
 # --------------------------------------------------------- URL lifting
-
-
-def make_canonical_links_udf(scope_host: str, js_only: bool = False):
-    """UDF: (base_url, hrefs array) → canonical, in-scope, non-asset URLs.
-
-    ``js_only=True`` reproduces the script-src rule: canonical URL must
-    end ``.js``/``.mjs`` (reference break_checker.py:1411-1416).
-    Dedup + sort happens per page, matching ``sorted(set(...))`` enqueue
-    order (break_checker.py:1403).
-    """
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def canonical_links(base: pd.Series, links: pd.Series) -> pd.Series:
-        out = []
-        for base_url, hrefs in zip(base, links):
-            if hrefs is None:
-                out.append([])
-                continue
-            keep = set()
-            for href in hrefs:
-                cand = urlnorm.canonicalize(base_url, href, scope_host)
-                if cand is None or urlnorm.skip_by_path(cand):
-                    continue
-                if js_only and not cand.lower().endswith((".js", ".mjs")):
-                    continue
-                keep.add(cand)
-            out.append(sorted(keep))
-        return pd.Series(out)
-
-    return canonical_links
 
 
 @F.pandas_udf(T.StringType())
@@ -243,32 +62,9 @@ def url_path(url: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.StringType())
-def normalize_email(raw: pd.Series) -> pd.Series:
-    """Canonical lower-case email or null (contacts.normalize_email)."""
-    return raw.map(lambda e: contacts.normalize_email(e) if e else None)
-
-
-@F.pandas_udf(T.StringType())
-def email_org(canonical: pd.Series) -> pd.Series:
-    """Registered domain of the email's domain part (org-scope filter)."""
-    return canonical.map(lambda e: contacts.email_org(e) if e else None)
-
-
-@F.pandas_udf(T.StringType())
 def registered_domain(host: pd.Series) -> pd.Series:
     """Registered domain (eTLD+1) of a hostname."""
     return host.map(lambda h: contacts.registered_domain(h) if h else None)
-
-
-@F.pandas_udf(T.StringType())
-def normalize_phone(raw: pd.Series, region: pd.Series) -> pd.Series:
-    """Digits-only national phone or null (contacts.normalize_phone)."""
-    return pd.Series(
-        [
-            contacts.normalize_phone(r, reg) if r else None
-            for r, reg in zip(raw, region)
-        ]
-    )
 
 
 @F.pandas_udf(T.StringType())

@@ -14,8 +14,9 @@ Reproduces the reference's per-page `_process_url` + `extract_data`
 * JS-fetched URLs: emails only, from the raw content; no phones, no
   link following (bc:1374-1377).
 
-Everything runs on Arrow batches (pandas UDFs parse each page once);
-the surrounding plumbing (decode, when/otherwise masking, explode,
+The per-page work is one Arrow-batched ``mapInPandas`` stage
+(:func:`_fused_preextract_fn`) that parses each page once; the
+surrounding plumbing (decode, when/otherwise masking, explode,
 joins) is native Catalyst expressions.
 """
 
@@ -26,36 +27,18 @@ from typing import Tuple
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql import types as T
 
-from ..functions import udfs
+from ..functions import urlnorm
 
-
-class DropCounters:
-    """Exact kept/dropped counters (reference bc:1238-1241), computed
-    for free inside whatever action first materializes the contacts
-    plan (``df.observe`` / CollectMetrics — no separate count job).
-
-    ``get()`` blocks until that action completes, then returns
-    [(metric, value), ...].
-    """
-
-    def __init__(self, email_obs: Observation, phone_obs: Observation) -> None:
-        self._email_obs = email_obs
-        self._phone_obs = phone_obs
-
-    def get(self) -> list[tuple[str, int]]:
-        return [
-            ("emails_dropped", int(self._email_obs.get["value"])),
-            ("phones_dropped", int(self._phone_obs.get["value"])),
-        ]
 
 class PreDrops:
-    """:class:`DropCounters` twin for the fused extraction stage: dropped
-    counts come pre-aggregated per page (from the pre-extraction pass,
-    or the round's own fused stage) and are summed per round by an
-    Observation on the round's extracted rows — same in-band,
-    no-extra-job contract. The same Observation sums the round's
-    emitted links (``nl``), which upper-bounds its enqueue-time
-    candidates."""
+    """Exact kept/dropped counters (reference bc:1238-1241) of one
+    extraction: dropped counts come pre-aggregated per page (from the
+    pre-extraction pass, or the round's own fused stage) and are summed
+    per round by an Observation on the round's extracted rows, inside
+    whatever action first materializes them (no separate count job).
+    The same Observation sums the round's emitted links (``nl``), which
+    upper-bounds its enqueue-time candidates. ``get()`` blocks until
+    that action completes, then returns [(metric, value), ...]."""
 
     def __init__(self, obs: Observation) -> None:
         self._obs = obs
@@ -74,40 +57,6 @@ class PreDrops:
 
 
 _JS_PATH = r"\.m?js$"
-
-
-def is_js_url(url_col):
-    """True when the URL's *path* ends .js/.mjs (bc:1374)."""
-    return udfs.url_path(url_col).rlike(_JS_PATH)
-
-
-def _enrich(src: DataFrame, keep: list[str]) -> DataFrame:
-    """Shared per-page feature pass: (keep..., hrefs, script_srcs,
-    emails_raw, phones_raw, _is_js) from (url, html, text) rows —
-    passes 1-3 of the module docstring as one FUSED Arrow pipeline
-    (udfs.page_features: the big raw string crosses the Arrow boundary
-    once; one python runner instead of three chained ones)."""
-    raw_str = F.when(
-        F.col("html").isNotNull(), F.decode(F.col("html"), "UTF-8")
-    ).otherwise(F.col("text"))
-
-    base = (
-        src.filter(F.col("html").isNotNull() | F.col("text").isNotNull())
-        .withColumn("_is_js", is_js_url(F.col("url")))
-        .withColumn("_raw", raw_str)
-    )
-
-    feats = base.withColumn(
-        "_pf", udfs.page_features(F.col("_raw"), F.col("text"), F.col("_is_js"))
-    )
-    return feats.select(
-        *keep,
-        F.col("_pf.hrefs").alias("hrefs"),
-        F.col("_pf.script_srcs").alias("script_srcs"),
-        F.col("_pf.emails_raw").alias("emails_raw"),
-        F.col("_pf.phones_raw").alias("phones_raw"),
-        F.col("_is_js"),
-    )
 
 
 def process_pages(
@@ -140,8 +89,8 @@ def process_pages(
     :func:`_fused_preextract_fn` the pre-extract pass uses, with depth
     riding through), replacing the chained pandas-UDF pipeline — the
     classic/live rounds carry a single Python stage and the downstream
-    candidate build is pure Catalyst. The chained form stays as
-    :func:`process_pages_chained` for the equality test.
+    candidate build is pure Catalyst. tests/chained_extract.py keeps
+    the chained form as the equality reference.
     """
     base = (
         fetched.select("url", "depth", "html", "text")
@@ -186,150 +135,7 @@ def process_pages(
     return link_candidates, contacts, PreDrops(drop_obs), [enr]
 
 
-def process_pages_chained(
-    fetched: DataFrame,
-    scope_host: str,
-    default_region: str | None,
-    org_domain: str,
-) -> Tuple[DataFrame, DataFrame, DataFrame, list]:
-    """The pre-r6 chained-UDF form of :func:`process_pages`
-    (page_features → canonical_links ×2 → exploded normalize chains
-    with CollectMetrics counters). Kept as the reference
-    implementation for the fused≡chained classic-round equality test —
-    not on any hot path. Its link_candidates carry (url, depth) only.
-    """
-    enriched = _enrich(fetched, ["url", "depth"]).cache()
-
-    # ---- link candidates (depth + 1) -------------------------------
-    links_udf = udfs.make_canonical_links_udf(scope_host, js_only=False)
-    scripts_udf = udfs.make_canonical_links_udf(scope_host, js_only=True)
-    link_candidates = (
-        enriched.filter(~F.col("_is_js"))
-        .select(
-            F.explode(
-                F.concat(
-                    links_udf(F.col("url"), F.col("hrefs")),
-                    scripts_udf(F.col("url"), F.col("script_srcs")),
-                )
-            ).alias("url"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        .distinct()
-    )
-
-    # ---- contacts ---------------------------------------------------
-    email_rows_c = (
-        enriched.select("url", "depth", F.explode("emails_raw").alias("_raw_id"))
-        .withColumn("identifier", udfs.normalize_email(F.col("_raw_id")))
-        .withColumn(
-            "_org_ok",
-            F.when(
-                F.col("identifier").isNotNull(),
-                udfs.email_org(F.col("identifier")) == F.lit(org_domain),
-            ).otherwise(F.lit(False)),
-        )
-    ).cache()
-    phone_rows_c = (
-        enriched.select("url", "depth", F.explode("phones_raw").alias("_raw_id"))
-        .withColumn(
-            "identifier",
-            udfs.normalize_phone(F.col("_raw_id"), F.lit(default_region)),
-        )
-    ).cache()
-
-    # ---- exact kept/dropped counters, observed in-band --------------
-    # CollectMetrics nodes sit below the keep-filters, so the counts
-    # ride along with the contacts-materializing action instead of a
-    # second scan job per round (r2 verdict: cut fixed round cost).
-    email_obs, phone_obs = Observation(), Observation()
-    email_rows = email_rows_c.observe(
-        email_obs,
-        F.coalesce(
-            F.sum(F.when(~F.col("_org_ok"), 1).otherwise(0)), F.lit(0)
-        ).alias("value"),
-    )
-    phone_rows = phone_rows_c.observe(
-        phone_obs,
-        F.coalesce(
-            F.sum(F.when(F.col("identifier").isNull(), 1).otherwise(0)), F.lit(0)
-        ).alias("value"),
-    )
-
-    contacts = (
-        email_rows.filter(F.col("_org_ok"))
-        .select(
-            F.lit("email").alias("kind"),
-            "identifier",
-            F.col("url").alias("source_url"),
-            "depth",
-        )
-        .unionByName(
-            phone_rows.filter(F.col("identifier").isNotNull()).select(
-                F.lit("phone").alias("kind"),
-                "identifier",
-                F.col("url").alias("source_url"),
-                "depth",
-            )
-        )
-    )
-
-    caches = [enriched, email_rows_c, phone_rows_c]
-    return link_candidates, contacts, DropCounters(email_obs, phone_obs), caches
-
-
 # --------------------------------------------------------- pre-extraction
-
-_NORM_CONTACTS_T = T.StructType(
-    [
-        T.StructField(
-            "contacts",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType()),
-                        T.StructField("identifier", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("emails_dropped", T.LongType()),
-        T.StructField("phones_dropped", T.LongType()),
-    ]
-)
-
-
-def _make_normalize_contacts_udf(default_region: str | None, org_domain: str):
-    """Per-page contact normalization + org/region filtering as ONE
-    Arrow batch op (no explode/groupBy shuffle): semantically identical
-    to process_pages' exploded normalize→filter chain, applied to each
-    page's (small) raw arrays in place."""
-    from ..functions import contacts as cfn
-
-    @F.pandas_udf(_NORM_CONTACTS_T)
-    def norm(emails_raw, phones_raw):
-        import pandas as pd
-
-        out = []
-        for es, ps in zip(emails_raw, phones_raw):
-            kept: list[dict] = []
-            ed = pd_ = 0
-            for raw in es if es is not None else []:
-                ident = cfn.normalize_email(raw) if raw else None
-                if ident is not None and cfn.email_org(ident) == org_domain:
-                    kept.append({"kind": "email", "identifier": ident})
-                else:
-                    ed += 1
-            for raw in ps if ps is not None else []:
-                ident = cfn.normalize_phone(raw, default_region) if raw else None
-                if ident is not None:
-                    kept.append({"kind": "phone", "identifier": ident})
-                else:
-                    pd_ += 1
-            out.append((kept, ed, pd_))
-        return pd.DataFrame(out, columns=["contacts", "emails_dropped", "phones_dropped"])
-
-    return norm
-
 
 _PRE_LINK_T = T.StructType(
     [
@@ -364,6 +170,38 @@ _PRE_SCHEMA = T.StructType(
 )
 
 
+def _page_links(url: str, hrefs: list, srcs: list, scope_host: str) -> list:
+    """A page's canonical, in-scope, non-asset link URLs: its hrefs,
+    deduped and sorted, then its ``.js``/``.mjs`` script srcs, deduped
+    and sorted (duplicates across the two lists stay), in the
+    reference's ``sorted(set(...))`` enqueue order (bc:1397-1421).
+
+    ``canonicalize`` + ``skip_by_path`` run once per distinct
+    (stripped href before its first ``#``, whether it has a ``#``) on
+    the page: ``canonicalize`` drops the fragment, and the rest of the
+    href reaches the result only through that key (equality with the
+    unmemoized loop: tests/test_kernel_diff.py)."""
+    memo: dict = {}
+
+    def canon(href):
+        if not href:
+            return None
+        pre, hash_, _ = href.strip().partition("#")
+        key = (pre, hash_)
+        if key not in memo:
+            cand = urlnorm.canonicalize(url, href, scope_host)
+            memo[key] = None if cand is None or urlnorm.skip_by_path(cand) else cand
+        return memo[key]
+
+    keep = {c for c in map(canon, hrefs) if c is not None}
+    keep_js = {
+        c
+        for c in map(canon, srcs)
+        if c is not None and c.lower().endswith((".js", ".mjs"))
+    }
+    return sorted(keep) + sorted(keep_js)
+
+
 def _fused_preextract_fn(
     scope_host: str,
     default_region: str | None,
@@ -373,15 +211,23 @@ def _fused_preextract_fn(
     """Whole-page extraction (harvest + sweeps + canonical links +
     contact normalization) as ONE mapInPandas stage.
 
-    Row-for-row identical to the chained plan in
-    :func:`preextract_pages_chained` (page_features →
-    canonical_links ×2 → normalize-contacts), which it replaces on the
-    hot path: the chained form is four dependent pandas UDFs, i.e.
-    three extra JVM↔Python Arrow round trips of every batch per pass —
-    measured ~90% of the pre-extract wall time on the bench corpus
-    (the pure-Python page work is ~14 core-seconds per 100k pages).
-    Equality is pinned by tests/test_crawl_e2e.py's fused≡chained
-    sweep (exact rows, including per-page link order).
+    Row-for-row identical to the chained plan it replaced
+    (page_features → canonical_links ×2 → normalize-contacts, kept in
+    tests/chained_extract.py on the straightforward per-page semantics:
+    stdlib ``HTMLParser`` harvest, the reference regexes, ``norm_text``
+    by definition, one ``canonicalize`` per href). Equality is pinned
+    by tests/test_crawl_e2e.py's fused≡chained tests (exact rows,
+    including per-page link order) and tests/test_kernel_diff.py.
+
+    The stage costs its per-page Python work, not the Arrow boundary.
+    On the 2000-page ``replay_bulk`` corpus (4 cores, ``local[4]``) the
+    whole stage took 1.29 s and an identity ``mapInPandas`` over the
+    same (url, page, text) columns 0.41 s, of which 0.10 s is the scan
+    and decode. Single-threaded, the per-page work on those pages is
+    3.6 s: harvest (links-only scan) 0.63 s, ``norm_text`` 0.84 s,
+    email sweeps 0.63 s, phone sweeps 1.14 s, link canonicalization
+    0.24 s, link host/struct key 0.08 s; the rest is contact
+    normalization and row assembly.
     """
     import re as _re
     from urllib.parse import urlparse
@@ -434,30 +280,13 @@ def _fused_preextract_fn(
                 if is_js:
                     links: list = []
                 else:
-                    # two independently deduped+sorted lists, then
-                    # concatenated — exactly concat(links_udf,
-                    # scripts_udf) including cross-list duplicates
-                    keep = set()
-                    for href in hrefs:
-                        cand = urlnorm.canonicalize(url, href, scope_host)
-                        if cand is None or urlnorm.skip_by_path(cand):
-                            continue
-                        keep.add(cand)
-                    keep_js = set()
-                    for href in srcs:
-                        cand = urlnorm.canonicalize(url, href, scope_host)
-                        if cand is None or urlnorm.skip_by_path(cand):
-                            continue
-                        if not cand.lower().endswith((".js", ".mjs")):
-                            continue
-                        keep_js.add(cand)
                     links = [
                         {
                             "url": u,
                             "host": (urlparse(u).hostname or "").lower(),
                             "skey": urlnorm.struct_key_str(u),
                         }
-                        for u in sorted(keep) + sorted(keep_js)
+                        for u in _page_links(url, hrefs, srcs, scope_host)
                     ]
 
                 kept: list = []
@@ -544,41 +373,6 @@ def preextract_pages(
     return base.mapInPandas(
         _fused_preextract_fn(scope_host, default_region, org_domain),
         schema=_PRE_SCHEMA,
-    )
-
-
-def preextract_pages_chained(
-    pages: DataFrame,
-    scope_host: str,
-    default_region: str | None,
-    org_domain: str,
-) -> DataFrame:
-    """The pre-r6 chained-UDF form of :func:`preextract_pages`
-    (page_features → canonical_links ×2 → normalize-contacts). Kept as
-    the reference implementation for the fused≡chained equality test —
-    not on any hot path."""
-    enr = _enrich(pages.select("url", "html", "text"), ["url"])
-    links_udf = udfs.make_canonical_links_udf(scope_host, js_only=False)
-    scripts_udf = udfs.make_canonical_links_udf(scope_host, js_only=True)
-    empty = F.array().cast("array<string>")
-    norm_udf = _make_normalize_contacts_udf(default_region, org_domain)
-    return enr.select(
-        "url",
-        F.when(F.col("_is_js"), empty)
-        .otherwise(
-            F.concat(
-                links_udf(F.col("url"), F.col("hrefs")),
-                scripts_udf(F.col("url"), F.col("script_srcs")),
-            )
-        )
-        .alias("links"),
-        norm_udf(F.col("emails_raw"), F.col("phones_raw")).alias("_nc"),
-    ).select(
-        "url",
-        "links",
-        F.col("_nc.contacts").alias("contacts"),
-        F.col("_nc.emails_dropped").alias("emails_dropped"),
-        F.col("_nc.phones_dropped").alias("phones_dropped"),
     )
 
 

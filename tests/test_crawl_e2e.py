@@ -500,16 +500,19 @@ def test_metrics_recorded(spark, pages_df, seeds_df):
 def test_fused_preextract_equals_chained(spark, pages_df):
     """r6: preextract_pages is one fused mapInPandas stage; its rows
     (incl. per-page link ORDER and exact drop counts) must equal the
-    chained pandas-UDF composition it replaced."""
+    chained pandas-UDF composition it replaced, run on the reference
+    semantics of tests/chained_extract.py (stdlib HTMLParser harvest,
+    the pre-fast-path regexes and norm_text, no canonicalize memo)."""
     from breakchecker_spark.operators import extract
 
     from urllib.parse import urlparse
 
     from breakchecker_spark.functions import urlnorm
+    from tests import chained_extract
 
     args = (fixture_web.SCOPE, "GR", fixture_web.SCOPE)
     fused = extract.preextract_pages(pages_df, *args)
-    chained = extract.preextract_pages_chained(pages_df, *args)
+    chained = chained_extract.preextract_pages_chained(pages_df, *args)
     ra = sorted(
         (r.asDict(recursive=True) for r in fused.collect()),
         key=lambda r: r["url"],
@@ -544,18 +547,20 @@ def test_fused_process_pages_equals_chained(spark, pages_df):
     """r6: the classic/live per-round extraction is one fused
     mapInPandas stage; its outputs (link candidate set incl. carried
     host/skey, contact rows, exact drop counts) must equal the chained
-    pandas-UDF pipeline it replaced."""
+    pandas-UDF pipeline it replaced, run on the reference semantics of
+    tests/chained_extract.py."""
     from urllib.parse import urlparse
 
     from breakchecker_spark.functions import urlnorm
     from breakchecker_spark.operators import extract
+    from tests import chained_extract
 
     fetched = pages_df.select(
         "url", F.lit(2).alias("depth"), "html", "text"
     )
     args = (fixture_web.SCOPE, "GR", fixture_web.SCOPE)
     links_f, contacts_f, drops_f, caches_f = extract.process_pages(fetched, *args)
-    links_c, contacts_c, drops_c, caches_c = extract.process_pages_chained(
+    links_c, contacts_c, drops_c, caches_c = chained_extract.process_pages_chained(
         fetched, *args
     )
     rows_f = links_f.collect()
