@@ -49,8 +49,10 @@ _EMAIL_BAD_TLDS = (
 # Negative lookahead keeps ``logo@2x.png``-style strings out
 # (reference break_checker.py:985-988). Java regex (Spark's
 # regexp_extract_all) supports the same lookahead syntax.
+_EMAIL_LOCAL_CHAR = r"[a-zA-Z0-9._%+-]"
 EMAIL_PATTERN = (
-    r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.(?!(?:"
+    _EMAIL_LOCAL_CHAR
+    + r"+@[a-zA-Z0-9.-]+\.(?!(?:"
     + "|".join(_EMAIL_BAD_TLDS)
     + r")\b)[a-zA-Z]{2,}"
 )
@@ -62,8 +64,55 @@ EMAIL_RE = re.compile(EMAIL_PATTERN)
 # digit), so the matches are the same; a pattern that starts with a
 # required character lets the regex engine skip ahead to candidate
 # positions instead of trying every one.
-PHONE_PATTERN = r"(?:\+\d|\d)[\d\s()\-]{6,}\d"
+_PHONE_MID_CHAR = r"[\d\s()\-]"
+PHONE_PATTERN = r"(?:\+\d|\d)" + _PHONE_MID_CHAR + r"{6,}\d"
 PHONE_RE = re.compile(PHONE_PATTERN)
+
+# The sweeps run these patterns only where a match can be. They map
+# the text to one class byte per character (email) or per UTF-8 byte
+# (phone) with ``bytes.translate`` and find candidate places with a
+# search that starts with a literal byte, which the regex engine scans
+# for far faster than a character class.
+
+
+def _class_bytes(classify) -> bytes:
+    return bytes(ord(classify(b)) for b in range(256))
+
+
+# Email, over ``encode("ascii", "replace")`` (one byte per character,
+# '?' for a non-ASCII one): 'l' for a character of the local part's
+# class, '.' for any other; no non-ASCII character is in that class.
+_EMAIL_LOCAL_CLASS = _class_bytes(
+    lambda b: "l" if re.fullmatch(_EMAIL_LOCAL_CHAR, chr(b)) else "."
+)
+
+_PHONE_CHAR = re.compile(_PHONE_MID_CHAR)
+
+
+def _phone_byte_class(b: int) -> str:
+    """Class of a UTF-8 byte for the phone sweep: 'd' an ASCII digit, or
+    the lead byte of a sequence that may encode a non-ASCII ``\\d`` or
+    ``\\s`` character; 's' any other ASCII character of the pattern's
+    middle class, or a continuation byte; '+' itself; 'x' the lead byte
+    of a sequence whose characters are none of these; '.' any other
+    ASCII character. So a match lies within one run of class bytes
+    without a '.', and its bytes from its first digit's lead byte to its
+    last digit's lead byte read ``d[ds]{6,}d``."""
+    if b < 0x80:
+        c = chr(b)
+        if re.fullmatch(r"\d", c):
+            return "d"
+        return "s" if _PHONE_CHAR.fullmatch(c) else "+" if c == "+" else "."
+    if b < 0xC0:
+        return "s"
+    if b < 0xC2 or b >= 0xF0:  # 4-byte sequences (or none): taken as possible
+        return "d"
+    lo, n = ((b & 0x1F) << 6, 64) if b < 0xE0 else ((b & 0x0F) << 12, 4096)
+    return "d" if any(_PHONE_CHAR.match(chr(c)) for c in range(lo, lo + n)) else "x"
+
+
+_PHONE_BYTE_CLASS = _class_bytes(_phone_byte_class)
+_PHONE_HINT = re.compile(rb"d[ds]{6,}d")
 
 # ------------------------------------------------------- region guessing
 
@@ -515,12 +564,50 @@ def tel_numbers(href: str) -> List[str]:
 
 
 def extract_emails(text: str) -> List[str]:
-    """All raw email candidates in normalized text (order of appearance)."""
-    if "@" not in text:  # every match contains one
+    """All raw email candidates in normalized text (order of appearance):
+    ``EMAIL_RE.findall(text)``.
+
+    Every match holds one '@', right after a run of local-part
+    characters. Whether a match through a given '@' exists does not
+    depend on where in that run it starts, so findall's match is the
+    one from the run's first character at or after the previous
+    match's end, or there is none through that '@'.
+    """
+    at = text.find("@")
+    if at < 0:
         return []
-    return EMAIL_RE.findall(text)
+    cls = text.encode("ascii", "replace").translate(_EMAIL_LOCAL_CLASS)
+    out: List[str] = []
+    end = 0
+    while at >= 0:
+        start = max(end, cls.rfind(b".", 0, at) + 1)
+        m = EMAIL_RE.match(text, start) if start < at else None
+        if m:
+            out.append(m.group())
+            end = m.end()
+        at = text.find("@", max(end, at + 1))
+    return out
 
 
 def extract_phones(text: str) -> List[str]:
-    """All raw phone candidates in normalized text (order of appearance)."""
-    return PHONE_RE.findall(text)
+    """All raw phone candidates in normalized text (order of appearance):
+    ``PHONE_RE.findall(text)``.
+
+    A match uses only characters of ``[\\d\\s()\\-+]`` and the pattern
+    has no lookaround, so findall over the text is findall over each of
+    its runs between ASCII characters outside that set. Runs whose class
+    bytes (:func:`_phone_byte_class`) hold no ``d[ds]{6,}d`` hold no
+    match and are skipped.
+    """
+    raw = text.encode("utf-8", "surrogatepass")
+    cls = raw.translate(_PHONE_BYTE_CLASS)
+    out: List[str] = []
+    hit = _PHONE_HINT.search(cls)
+    while hit:
+        a = cls.rfind(b".", 0, hit.start()) + 1
+        b = cls.find(b".", hit.end())
+        if b < 0:
+            b = len(cls)
+        out += PHONE_RE.findall(raw[a:b].decode("utf-8", "surrogatepass"))
+        hit = _PHONE_HINT.search(cls, b)
+    return out

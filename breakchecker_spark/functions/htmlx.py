@@ -17,12 +17,14 @@ Entity references are decoded (convert_charrefs), matching bs4's
 for ``operators/webgraph``, ``oracle.simulate_crawl``) it is a full
 ``HTMLParser`` pass (:class:`_Harvester`). Without text, the crawl's
 extraction kernel, it is the links-only scan (:class:`_LinkScanner`),
-which yields the same hrefs and script srcs at a fraction of the cost.
-It replays this interpreter's ``html.parser`` dispatch, so
+which yields the same hrefs and script srcs at a fraction of the cost:
+it replays this interpreter's ``html.parser`` dispatch, skips markup
+that cannot raise an event, and reads a plain start tag (attributes
+that are bare names or ``name="value"``) with one regex match. So
 tests/test_kernel_diff.py pins it to the full pass (hypothesis over
 comments, marked sections, unterminated constructs, script/style
-bodies, quoted ``>``), and that test is what would flag a Python
-upgrade that changes ``html.parser``.
+bodies, quoted ``>``, plain tags and their near misses), and that test
+is what would flag a Python upgrade that changes ``html.parser``.
 """
 
 from __future__ import annotations
@@ -85,15 +87,30 @@ _ASCII_LETTERS = frozenset(string.ascii_letters)
 # begins a/s (either case) can lower-case to a, script or style.
 _MAYBE_EVENT_TAG = frozenset("aAsS")
 _EVENT_TAGS = ("a", "script", "style")
+# The attributes of a plain start tag: each a bare name or
+# name="value", with ASCII whitespace around them, then '>'.
+# HTMLParser's locatestarttagend_tolerant and attrfind_tolerant consume
+# exactly these attributes, so the tag ends at this '>' and
+# parse_starttag fires handle_starttag with them.
+_WS = r"[\t\n\r\f ]"
+_PLAIN_ATTRS = rf'(?:{_WS}+[^\s/>"\'=<]+(?:{_WS}*={_WS}*"[^"]*")?)*{_WS}*>'
 # Runs of markup that raise no event and leave CDATA mode off, skipped
 # in one C-level match: character data, end tags (outside CDATA mode
 # HTMLParser ends one at the first '>' after '</'), and start tags not
-# starting a/s whose text up to the first '>' has no '<' or quote.
-# HTMLParser resumes after such a start tag somewhere in (its '<', that
-# '>' + 1] (an attribute value cannot run past the '>' without a quote)
-# and finds the next construct at the next '<', which lies after the
-# '>', so resuming just after the '>' finds the same one.
-_SKIP = re.compile(r"(?:[^<]+|</[^>]*>|<[b-rt-zB-RT-Z][^<>\"']*>)*")
+# starting a/s that are either plain or have no '<' or quote up to
+# their first '>'. HTMLParser resumes after the latter somewhere in
+# (its '<', that '>' + 1] (an attribute value cannot run past the '>'
+# without a quote) and finds the next construct at the next '<', which
+# lies after the '>', so resuming just after the '>' finds the same one.
+_SKIP = re.compile(
+    rf"(?:[^<]+|</[^>]*>|<[b-rt-zB-RT-Z][^<>\"']*>"
+    rf"|<[b-rt-zB-RT-Z][^\t\n\r\f />\x00<]*{_PLAIN_ATTRS})*"
+)
+# A plain <a> start tag whose first attribute is href="...": its event
+# is that href, entity-decoded as parse_starttag does.
+_PLAIN_A_HREF = re.compile(
+    rf'<[aA]{_WS}+[hH][rR][eE][fF]{_WS}*={_WS}*"([^"]*)"{_PLAIN_ATTRS}'
+)
 
 
 class _LinkScanner(_Harvester):
@@ -107,10 +124,12 @@ class _LinkScanner(_Harvester):
     ``end`` set).  Runs that cannot raise an event are skipped by one
     :data:`_SKIP` match.  Other constructs are delimited by the
     stdlib's own ``parse_comment`` / ``parse_pi`` /
-    ``parse_html_declaration`` / ``check_for_whole_start_tag``; ``a``,
-    ``script`` and ``style`` start tags go through ``parse_starttag``
-    (which fires the event and enters CDATA mode) and CDATA mode ends
-    in ``parse_endtag``.  What it leaves out is attribute parsing for
+    ``parse_html_declaration`` / ``check_for_whole_start_tag``; a
+    plain ``<a href="...">`` start tag is read by one
+    :data:`_PLAIN_A_HREF` match, and other ``a``, ``script`` and
+    ``style`` start tags go through ``parse_starttag`` (which fires the
+    event and enters CDATA mode); CDATA mode ends in
+    ``parse_endtag``.  What it leaves out is attribute parsing for
     other tags, character data and its entity decoding, and line
     counting.
     """
@@ -136,7 +155,11 @@ class _LinkScanner(_Harvester):
                     return
                 c = doc[i + 1 : i + 2]
                 if c in _ASCII_LETTERS:
-                    if (
+                    m = _PLAIN_A_HREF.match(doc, i) if c in "aA" else None
+                    if m:
+                        self.hrefs.append(_parser.unescape(m.group(1)))
+                        k = m.end()
+                    elif (
                         c in _MAYBE_EVENT_TAG
                         and _parser.tagfind_tolerant.match(doc, i + 1).group(1).lower()
                         in _EVENT_TAGS

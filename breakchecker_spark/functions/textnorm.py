@@ -63,14 +63,20 @@ def norm_text(s: str) -> str:
     """
     if "&" in s:  # html.unescape is identity otherwise
         s = _html.unescape(s)
-    if "\\u" in s or "\\x" in s:  # escape regexes can't match otherwise
+    # escape regexes can't match otherwise; a one-character test scans
+    # far faster than a two-character one
+    if "\\" in s and ("\\u" in s or "\\x" in s):
         s = decode_escapes(s)
     ascii_ = s.isascii()
     if not ascii_:
         s = unicodedata.normalize("NFKC", s)
     # isprintable() is False for every category-C character (and every
     # separator but the ASCII space): True means nothing to drop
-    if s.replace("\n", "").replace("\r", "").replace("\t", "").isprintable():
+    bare = s
+    for c in _KEEP_CONTROL:
+        if c in bare:  # replace() scans slower than this when c is absent
+            bare = bare.replace(c, "")
+    if bare.isprintable():
         return s
     s = _ASCII_C_RE.sub("", s)
     return s if ascii_ else _NON_ASCII_RUN.sub(_drop_c_in_run, s)

@@ -219,15 +219,16 @@ def _fused_preextract_fn(
     by tests/test_crawl_e2e.py's fused≡chained tests (exact rows,
     including per-page link order) and tests/test_kernel_diff.py.
 
-    The stage costs its per-page Python work, not the Arrow boundary.
     On the 2000-page ``replay_bulk`` corpus (4 cores, ``local[4]``) the
-    whole stage took 1.29 s and an identity ``mapInPandas`` over the
-    same (url, page, text) columns 0.41 s, of which 0.10 s is the scan
-    and decode. Single-threaded, the per-page work on those pages is
-    3.6 s: harvest (links-only scan) 0.63 s, ``norm_text`` 0.84 s,
-    email sweeps 0.63 s, phone sweeps 1.14 s, link canonicalization
-    0.24 s, link host/struct key 0.08 s; the rest is contact
-    normalization and row assembly.
+    whole stage took 0.70 s, an identity ``mapInPandas`` over the same
+    (url, page, text) columns 0.36-0.43 s (0.1-0.15 s of it the scan
+    and decode) and an identity ``mapInArrow`` 0.34 s: about half the
+    stage is the Python worker round trip, and Arrow batches in place
+    of pandas would save at most ~0.1 s of it. Single-threaded, the
+    per-page work on those pages is 1.4 s: harvest (links-only scan)
+    0.28 s, ``norm_text`` 0.45 s, email sweeps 0.06 s, phone sweeps
+    0.16 s, link canonicalization 0.25 s, link host/struct key 0.08 s;
+    the rest is contact normalization and row assembly.
     """
     import re as _re
     from urllib.parse import urlparse

@@ -3,8 +3,9 @@
 Each fast path is compared with the straightforward form it replaces,
 kept in tests/chained_extract.py: the links-only HTML scan with a full
 stdlib ``HTMLParser`` pass, the per-page canonicalize memo with one
-``canonicalize`` per href, the ``@`` guard and the rewritten phone
-pattern with the reference regexes, and ``norm_text`` with its
+``canonicalize`` per href, the email and phone sweeps (which run their
+patterns only where a byte-class search finds a possible match) with
+``findall`` of the reference regexes, and ``norm_text`` with its
 one-character-at-a-time definition. Hypothesis runs derandomized, so
 every run draws the same examples; fixed cases pin the constructs that
 a random draw may miss. No Spark session is needed.
@@ -43,6 +44,15 @@ _HTML_PIECES = [
     "<br/>", "<img src=i.png />", "<span>", "<s>", "<sa href=1>", "</div>",
     "</A>", "</>", "<li\x00>", "<div <a href=inner>", "<x<a href=k>",
     "<\u017fcript>", "</\u017fcript>",
+    # start tags whose attributes are bare names or name="value", and
+    # near misses of that form
+    '<div class="c">', '<div a b="c" d>', '<p x="1" y=\'2\'>', '<div a ="b">',
+    '<div a= "b>c">', '<div ="b>c">', '<div a=="b">', '<p x="1"y="2">',
+    '<div a="b"/>', '<div a="b"\x0b>', '<div\x0ba="b">', '<b<a href="in">',
+    '<a href="h" class="c">', '<a href = "h" >', '<a\thref="t"\n>',
+    '<a href="1"x>', '<a hrefx="1">', '<A HREF="U" B>', '<a href="">',
+    '<a href="h"/>', '<a href="&amp;&#x41;">', '<a  href="h" c="<a href=i>">',
+    '<a\x0bhref="v">', '<A\x0cHREF="f">', '<a href="h" \x0bc="d">',
     # comments, marked sections, processing instructions, declarations
     "<!-- c -->", "<!--", "-->", "--!>", "<!---->", "<![CDATA[x]]>",
     "<![CDATA[", "]]>", "<![if IE]>", "<![endif]>", "<![bogus[", "<![",
@@ -91,6 +101,7 @@ def test_links_scan_equals_htmlparser_on_characters(doc):
         "<a href='amp&amp;lt&lt;hex&#x40;'>",
         "<a href=x",
         "<br/><a href=self-closing/>",
+        '<a\x0bhref="in-tag-name"><a href="h" class="c">',
     ]
     + list(fixture_web.build_pages().values()),
 )
@@ -154,7 +165,8 @@ _TEXT_PIECES = [
     "e\u0301", "\ufb01", "\u2460", "\uff10", "\u0663", "\u2014", "&amp;", "&#64;",
     "&#x200b;", "&nbsp;", "&", "\\u0040", "\\x41", "\\u200b", "\\",
     "info", "@ex.com", ".gr", ".png", "+30 210 123 4567", "(210) 1234-567",
-    "user@ex.com", "a@b.c", "x@2x.png",
+    "user@ex.com", "a@b.c", "x@2x.png", "?", "\u03b1", "\u03c4\u03b7\u03bb. ",
+    "\u1680", "\u3000", "\U0001d7ce", "\u0661\u0662",
 ]
 _TEXTS = _tokens(_TEXT_PIECES, 40)
 
@@ -182,13 +194,27 @@ def test_email_and_phone_sweeps_equal_reference_regexes(s):
         "nel\u0085line 2101234567", "del\x7fchar 210 123 4567",
         "mixed \u00a0nbsp\u200b zwsp \ufeff bom \u0085 nel",
         "&#x200b;&amp;&#64;\\u0040\\x41", "\ud800 lone surrogate \ue000",
-        "user@ex.com, logo@2x.png; a.b@c.d.gr",
+        "user@ex.com, logo@2x.png; a.b@c.d.gr", "x@2x.png\u00e9 y@b.co?z",
+        "\u03c4\u03b7\u03bb. 210 123 4567, \u03c6\u03b1\u03be 210\u20281234567",
+        "\u0663\u0663\u0663 \u0663\u0663\u0663\u0663\u0663 +\U0001d7ce1234567",
     ],
 )
 def test_sweeps_and_norm_text_fixed(s):
     assert textnorm.norm_text(s) == ref.ref_norm_text(s)
     assert contacts.extract_emails(s) == ref.ref_extract_emails(s)
     assert contacts.extract_phones(s) == ref.ref_extract_phones(s)
+
+
+def test_sweeps_every_code_point():
+    # the sweeps classify characters by byte before running the regexes
+    # (contacts._PHONE_BYTE_CLASS, contacts._EMAIL_LOCAL_CLASS); with each
+    # character inside a would-be match, a misclassified one shows
+    for c in map(chr, range(0x110000)):
+        s = f"12345{c}678"
+        assert contacts.extract_phones(s) == ref.ref_extract_phones(s), repr(c)
+    for c in map(chr, range(0x800)):
+        s = f"a{c}b@ex.gr{c}"
+        assert contacts.extract_emails(s) == ref.ref_extract_emails(s), repr(c)
 
 
 # ---------------------------------------------------- the whole kernel
